@@ -272,12 +272,6 @@ object Revolut {
 
   /** K1 — write one Ghostfolio CSV per input (csv_loader.py:11-23) and
     * return the loaded count (the pipeline contract, pipeline.py:23-34). */
-  def writeGhostfolio(plan: DataFrame, outFile: String): Long = {
-    val materialized = plan.cache()
-    try {
-      val n = materialized.count()
-      CsvSink.writeSingleFile(materialized, GhostfolioFields, outFile)
-      n
-    } finally materialized.unpersist()
-  }
+  def writeGhostfolio(plan: DataFrame, outFile: String): Long =
+    CsvSink.writeSingleFile(plan, GhostfolioFields, outFile).get
 }

@@ -21,8 +21,8 @@ final case class Preview(rows: Seq[PreviewRow],
   *
   * Scale note: preview is `limit(n)` over the line-numbered scan — Spark
   * stops reading after the first partition satisfies the limit; validation
-  * reuses the same compiled plan as conversion (one pass, counts via the
-  * cached frame in Runner).
+  * reuses the same compiled plan as conversion (one aggregate pass for the
+  * counts, a second only when there are errors to detail).
   */
 object Api {
 

@@ -1,9 +1,13 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.io.StringWriter
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /** CSV writer matching the reference's csv.DictWriter output
   * (csv_loader.py:11-23; dynamic.py:334-343):
@@ -12,8 +16,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *   - QUOTE_MINIMAL with doubled quotes (Spark: escape = quote char).
   *
   * `writeSingleFile` reproduces the reference's one-output-file-per-input
-  * contract via coalesce(1) + commit-rename; `write` is the scale path
-  * (one directory of part files, fully parallel).
+  * contract without funnelling the plan through one task: the rows are
+  * written as header-less part files in parallel, then joined in partition
+  * order behind one header and published with an atomic rename — or
+  * discarded, when the caller's gate refuses them.
   */
 object CsvSink {
 
@@ -42,45 +48,86 @@ object CsvSink {
   private def prepared(df: DataFrame, fieldOrder: Seq[String]): DataFrame =
     df.select(fieldOrder.map(n => pyStringify(df, n).as(n)): _*)
 
-  private def writer(df: DataFrame, delimiter: String) = {
+  /** Writer options, shared by the part files and the header. */
+  private def csvOptions(columns: Int, delimiter: String): Map[String, String] = {
     // csv.writer quirk: an empty (or None) value in a ONE-column row is
     // written as `""` — a quoted empty — so the record is distinguishable
     // from a blank line; in multi-column rows empties stay unquoted.
     // univocity substitutes empty/nullValue BEFORE quote processing, so the
     // two-char `""` lands raw, exactly as Python emits it.
-    val lone = if (df.columns.length == 1) "\"\"" else ""
-    df.write
-      .option("header", value = true)
-      .option("sep", delimiter)
-      .option("escape", "\"")       // RFC-4180 doubled quotes, like csv module
-      .option("emptyValue", lone)   // like DictWriter
-      .option("nullValue", lone)
+    val lone = if (columns == 1) "\"\"" else ""
+    Map(
+      "sep" -> delimiter,
+      "escape" -> "\"",       // RFC-4180 doubled quotes, like csv module
+      "emptyValue" -> lone,   // like DictWriter
+      "nullValue" -> lone,
       // Spark's CSV writer TRIMS cell whitespace by default; csv.writer
       // preserves it verbatim (fuzz case: a value ending in '\n' lost its
       // newline inside the quoted cell)
-      .option("ignoreLeadingWhiteSpace", value = false)
-      .option("ignoreTrailingWhiteSpace", value = false)
-      .mode("overwrite")
+      "ignoreLeadingWhiteSpace" -> "false",
+      "ignoreTrailingWhiteSpace" -> "false")
   }
 
-  /** Scale path: parallel multi-part CSV directory. */
-  def write(df: DataFrame, fieldOrder: Seq[String], outDir: String,
-            delimiter: String = ","): Unit =
-    writer(prepared(df, fieldOrder), delimiter).csv(outDir)
+  /** The header line, rendered by the generator Spark's CSV writer uses. */
+  private def header(schema: StructType, options: Map[String, String],
+                     timeZone: String): Array[Byte] = {
+    val out = new StringWriter()
+    val gen = new UnivocityGenerator(schema, out, new CSVOptions(options, false, timeZone))
+    gen.writeHeaders()
+    gen.close()
+    out.toString.getBytes(StandardCharsets.UTF_8)
+  }
 
-  /** Reference-compat path: exactly one CSV file at `outFile`. */
+  /** Spark's part files in partition order (`part-<partition>-<job>-c<n>`). */
+  private def partsInOrder(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    val parts = try listing.iterator.asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq finally listing.close()
+    parts.sortBy(n => (n.drop(5).takeWhile(_.isDigit).toInt, n)).map(dir.resolve)
+  }
+
+  private def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+    finally walk.close()
+  }
+
+  /** Reference-compat path: exactly one CSV file at `outFile`.
+    *
+    * The rows go out in parallel as header-less parts under
+    * `outFile.__staging__`. Once that job is done — so the row count
+    * observed on it, and any metrics the caller observed on `df`, are in —
+    * `publish` decides. If it agrees, the parts are joined in partition
+    * order behind the header into `outFile.__tmp__`, which is renamed onto
+    * `outFile` in one atomic move; otherwise `outFile` is left as it was.
+    * Staging is always removed. Returns the rows published, if any were.
+    */
   def writeSingleFile(df: DataFrame, fieldOrder: Seq[String], outFile: String,
-                      delimiter: String = ","): Unit = {
-    val tmp = outFile + ".__tmp__"
-    writer(prepared(df, fieldOrder).coalesce(1), delimiter).csv(tmp)
-    val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
-      .find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(sys.error(s"no part file produced under $tmp"))
-    val target = Paths.get(outFile)
-    if (target.getParent != null) Files.createDirectories(target.getParent)
-    Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
-    // clean the temp dir
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+                      delimiter: String = ",",
+                      publish: Long => Boolean = _ => true): Option[Long] = {
+    val options = csvOptions(fieldOrder.length, delimiter)
+    val rows = Observation()
+    val out = prepared(df, fieldOrder).observe(rows, count(lit(1)).as("rows"))
+    val staging = Paths.get(outFile + ".__staging__")
+    val tmp = Paths.get(outFile + ".__tmp__")
+    try {
+      out.write.options(options).mode("overwrite").csv(staging.toString)
+      val n = rows.get("rows").asInstanceOf[Long]
+      Option.when(publish(n)) {
+        val target = Paths.get(outFile).toAbsolutePath
+        Files.createDirectories(target.getParent)
+        val w = Files.newOutputStream(tmp)
+        try {
+          w.write(header(out.schema, options,
+            df.sparkSession.conf.get("spark.sql.session.timeZone")))
+          partsInOrder(staging).foreach(Files.copy(_, w))
+        } finally w.close()
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+        n
+      }
+    } finally {
+      deleteTree(staging)
+      Files.deleteIfExists(tmp)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.spec.{ETLMapping, PipelineSpec}
 
@@ -36,8 +36,10 @@ final case class PipelineResult(
   * tripped gate aborts the chain with no output written — the reference's
   * quarantine behavior (dynamic.py:334-343) lifted to chains.
   *
-  * Ungated stage counters ride the plan as `observe()` metrics and are
-  * collected from the final action's QueryExecution — zero extra passes.
+  * Ungated stage counters ride the plan as `Observation`s, filled in by
+  * whichever action first runs that stage — the final write, or a later
+  * gate's count — zero extra passes. The final frame is written the way
+  * Runner.convert writes: parallel parts, published only if it has rows.
   * Scale shape: an all-ungated chain is a single filter+project pipeline
   * (one stage, no shuffle; aggregate steps add exactly their groupBy
   * exchange); each fail_on_error gate adds one materialization boundary,
@@ -67,7 +69,7 @@ object Pipeline {
     steps.foreach { m =>
       require(m.fieldMappings.nonEmpty,
         s"pipeline step '${m.id}': empty field_mappings cannot feed a chain")
-      cur = stringified(stageOutput(Runner.plan(cur, m), cur, m))
+      cur = stringified(Runner.output(Runner.plan(cur, m), m))
     }
     cur
   }
@@ -79,16 +81,14 @@ object Pipeline {
       require(m.fieldMappings.nonEmpty,
         s"pipeline step '${m.id}': empty field_mappings cannot feed a chain")
     }
-    val spark = df.sparkSession
-    val runId = java.util.UUID.randomUUID().toString.take(8)
 
     // chain state
     var cur = df
     var abort: Option[Int] = None
     val persisted = List.newBuilder[DataFrame]
-    // stage index -> either exact counters (gated) or observe metric name
-    val gatedResults = scala.collection.mutable.Map[Int, StageResult]()
-    val observeNames = scala.collection.mutable.Map[Int, String]()
+    // stage index -> its counters, exact (gated) or observed (ungated);
+    // stages after a tripped gate are never built and have none
+    val counts = scala.collection.mutable.Map[Int, () => Runner.Counts]()
 
     steps.zipWithIndex.foreach { case ((m, foe), i) =>
       if (abort.isEmpty) {
@@ -97,91 +97,33 @@ object Pipeline {
           // from the persisted frame (downstream work starts only if clean)
           val planned = Runner.plan(cur, m).persist()
           persisted += planned
-          val (result, _) = Runner.summarize(planned, m, collectErrors = false)
-          gatedResults(i) = StageResult(m.id, ran = true,
-            result.successCount, result.skippedCount, result.errorCount)
+          val c = Runner.Counts.of(planned)
+          counts(i) = () => c
           // reference write gate: any surviving row AND no errors (K3)
-          val survivors = planned.filter(!col(Runner.SKIP)).limit(1).count()
-          if (result.errorCount > 0 || survivors == 0) abort = Some(i)
-          else cur = stringified(stageOutput(planned, cur, m))
+          if (c.errs > 0 || c.survivors == 0) abort = Some(i)
+          else cur = stringified(Runner.output(planned, m))
         } else {
-          val name = s"pipe_${runId}_$i"
-          observeNames(i) = name
-          val planned = Runner.plan(cur, m).observe(name,
-            coalesce(sum(when(col(Runner.SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
-            coalesce(sum(when(!col(Runner.SKIP) && size(col(Runner.ERRS)) === 0, 1L)
-              .otherwise(0L)), lit(0L)).as("clean"),
-            coalesce(sum(when(!col(Runner.SKIP), size(col(Runner.ERRS)).cast("long"))
-              .otherwise(0L)), lit(0L)).as("errs"))
-          cur = stringified(stageOutput(planned, cur, m))
+          val planned = Runner.plan(cur, m)
+          val gate = Observation()
+          counts(i) = () => Runner.Counts.of(gate, planned)
+          cur = stringified(Runner.output(Runner.observe(planned, gate), m))
         }
       }
     }
 
-    // collect the ungated stages' observed metrics from whatever action
-    // executes the final plan (the count below)
-    val captured = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (k, v) =>
-          if (k.startsWith(s"pipe_${runId}_")) captured.putIfAbsent(k, v)
-        }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-
-    val written =
-      if (abort.nonEmpty) false
-      else {
-        spark.listenerManager.register(listener)
-        try {
-          val finalFrame = cur.persist()
-          persisted += finalFrame
-          val n = finalFrame.count()
-          if (n > 0)
-            CsvSink.writeSingleFile(finalFrame, finalFrame.columns.toSeq, outFile)
-          // metrics are delivered async on the listener bus
-          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-          while (captured.size < observeNames.size && System.nanoTime() < deadline)
-            Thread.sleep(10)
-          n > 0
-        } finally spark.listenerManager.unregister(listener)
-      }
-
-    persisted.result().foreach(_.unpersist())
+    val written = try {
+      abort.isEmpty &&
+        CsvSink.writeSingleFile(cur, cur.columns.toSeq, outFile, publish = _ > 0).isDefined
+    } finally persisted.result().foreach(_.unpersist())
 
     val stages = steps.zipWithIndex.map { case ((m, _), i) =>
-      gatedResults.get(i).getOrElse {
-        observeNames.get(i).flatMap(n => Option(captured.get(n))) match {
-          case Some(r) =>
-            StageResult(m.id, ran = true, r.getLong(1), r.getLong(0), r.getLong(2))
-          case None => // after an abort (or an unexecuted chain) nothing ran
-            StageResult(m.id, ran = false, 0L, 0L, 0L)
-        }
+      counts.get(i).map(_()) match {
+        case Some(c) => StageResult(m.id, ran = true, c.clean, c.skipped, c.errs)
+        case None    => StageResult(m.id, ran = false, 0L, 0L, 0L)
       }
     }
     PipelineResult(stages, written, abort)
   }
-
-  /** A stage's destination frame from its annotated plan (or the grouped
-    * frame for an aggregate mapping — t12 steps chain like any other). */
-  private def stageOutput(planned: DataFrame, stageIn: DataFrame,
-                          m: ETLMapping): DataFrame =
-    if (Runner.hasAggregates(m)) {
-      // sorted by group key — the same deterministic order Runner.convert
-      // writes, so an aggregate FINAL step stays byte-identical to the
-      // sequential run
-      val out = Runner.aggregatePlan(stageIn, m)
-      val keys = out.columns.filterNot(c => m.fieldMappings.exists(fm =>
-        fm.destinationField == c && fm.transformType == "aggregate"))
-      if (keys.isEmpty) out else out.orderBy(keys.map(col): _*)
-    } else {
-      val dests = Runner.destFields(m)
-      planned.filter(!col(Runner.SKIP)).select(dests.map(col): _*)
-    }
 
   /** The CSV-boundary string semantics a sequential run would apply between
     * mappings: Python str() per type, null → "" (csv.DictWriter + the

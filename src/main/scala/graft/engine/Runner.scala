@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.spec.ETLMapping
 import graft.compile.TransformCompiler
@@ -57,46 +57,70 @@ object Runner {
     df.select(lineCol.cast("long").as(LINE) +: skip.as(SKIP) +: errCol +: valueCols: _*)
   }
 
-  def destFields(m: ETLMapping): Seq[String] =
-    TransformCompiler.compile(m, Set.empty).destOrder
+  /** The gate's counters over an annotated plan (row-level, before any
+    * aggregation): `validate` runs them as one aggregate query, `convert`
+    * and `Pipeline` observe them on the pass that writes. */
+  private val GateCounts: Seq[Column] = Seq(
+    coalesce(sum(when(col(SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
+    coalesce(sum(when(!col(SKIP) && size(col(ERRS)) === 0, 1L).otherwise(0L)), lit(0L)).as("clean"),
+    coalesce(sum(when(!col(SKIP), size(col(ERRS)).cast("long")).otherwise(0L)), lit(0L)).as("errs"),
+    count(lit(1)).as("total"))
 
-  private[engine] final case class Counts(skipped: Long, clean: Long, errs: Long, total: Long)
-
-  private[engine] def summarize(planned: DataFrame, m: ETLMapping,
-                        collectErrors: Boolean): (TransformResult, Counts) = {
-    val emptyMapping = m.fieldMappings.isEmpty
-    val agg = planned.agg(
-      coalesce(sum(when(col(SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
-      coalesce(sum(when(!col(SKIP) && size(col(ERRS)) === 0, 1L).otherwise(0L)), lit(0L)).as("clean"),
-      coalesce(sum(when(!col(SKIP), size(col(ERRS)).cast("long")).otherwise(0L)), lit(0L)).as("errs"),
-      count(lit(1)).as("total")
-    ).head()
-    val c = Counts(agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
-    val errors: Seq[RowError] =
-      if (collectErrors && c.errs > 0) {
-        import planned.sparkSession.implicits._
-        // driver-side error detail is BOUNDED: adversarial input with an
-        // error on every row must not OOM the driver (errorCount still
-        // reports the true total; past the cap, per-row detail comes from
-        // errorDataset/convertAtScale). Deterministic prefix: lowest line
-        // numbers first, not first-collected partitions.
-        planned.filter(!col(SKIP) && size(col(ERRS)) > 0)
-          .select(col(LINE), explode(col(ERRS)).as("e"))
-          .select(col(LINE).as("line_number"), col("e.field"),
-                  col("e.error_message"), col("e.source_value"))
-          .orderBy(col("line_number"), col("field"), col("error_message"))
-          .limit(MaxCollectedErrors)
-          .as[RowError].collect().toSeq
-      } else Nil
-    val result =
-      if (emptyMapping) TransformResult(0L, c.total, 0L, Nil, written = false)
-      else TransformResult(c.clean, c.skipped, c.errs, errors, written = false)
-    (result, c)
+  private[engine] final case class Counts(skipped: Long, clean: Long, errs: Long, total: Long) {
+    /** rows the filter rules keep */
+    def survivors: Long = total - skipped
   }
 
+  private[engine] object Counts {
+    def of(values: Map[String, Any]): Counts = {
+      def n(k: String) = values(k).asInstanceOf[Long]
+      Counts(n("skipped"), n("clean"), n("errs"), n("total"))
+    }
+    /** One aggregate query over an annotated plan. */
+    def of(planned: DataFrame): Counts = {
+      val r = planned.agg(GateCounts.head, GateCounts.tail: _*).head()
+      of(r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+    }
+    /** Counters `observe`d on `planned` by whatever action ran it; blocks
+      * until the listener bus has delivered them. AQE drops a query stage
+      * that comes out empty, and the metrics observed inside it with it:
+      * then they are recounted with one query. */
+    def of(gate: Observation, planned: DataFrame): Counts = {
+      val observed = gate.get
+      if (observed.isEmpty) of(planned) else of(observed)
+    }
+  }
+
+  /** `planned` with the gate's counters observed on the action that runs it. */
+  private[engine] def observe(planned: DataFrame, gate: Observation): DataFrame =
+    planned.observe(gate, GateCounts.head, GateCounts.tail: _*)
+
+  /** Per-row error detail, BOUNDED: adversarial input with an error on
+    * every row must not OOM the driver (errorCount still reports the true
+    * total). Deterministic prefix: lowest line numbers first, not
+    * first-collected partitions. */
+  private def errorDetail(planned: DataFrame): Seq[RowError] = {
+    import planned.sparkSession.implicits._
+    planned.filter(!col(SKIP) && size(col(ERRS)) > 0)
+      .select(col(LINE), explode(col(ERRS)).as("e"))
+      .select(col(LINE).as("line_number"), col("e.field"),
+              col("e.error_message"), col("e.source_value"))
+      .orderBy(col("line_number"), col("field"), col("error_message"))
+      .limit(MaxCollectedErrors)
+      .as[RowError].collect().toSeq
+  }
+
+  private def result(m: ETLMapping, c: Counts, errors: Seq[RowError],
+                     written: Boolean = false): TransformResult =
+    if (m.fieldMappings.isEmpty) TransformResult(0L, c.total, 0L, Nil, written = false)
+    else TransformResult(c.clean, c.skipped, c.errs, errors, written)
+
   /** Dry-run (reference validate_file, dynamic.py:259-265). */
-  def validate(df: DataFrame, m: ETLMapping): TransformResult =
-    summarize(plan(df, m), m, collectErrors = true)._1
+  def validate(df: DataFrame, m: ETLMapping): TransformResult = {
+    val planned = plan(df, m)
+    val c = Counts.of(planned)
+    result(m, c, if (c.errs > 0) errorDetail(planned) else Nil)
+  }
 
   // --- t12: aggregation transforms in the mapping DSL -----------------------
   // Reference ROADMAP.md:51 plans `sum/count/avg` as a transform type but
@@ -127,11 +151,14 @@ object Runner {
 
   /** Grouped output frame for a mapping with aggregate fields: group keys +
     * formatted aggregate strings, columns in field_mappings order. */
-  def aggregatePlan(df: DataFrame, m: ETLMapping): DataFrame = {
-    import graft.spec.FieldMapping
+  def aggregatePlan(df: DataFrame, m: ETLMapping): DataFrame = aggregated(plan(df, m), m)
+
+  /** The grouping over an annotated plan. The compiler treats `aggregate`
+    * as `direct`, so each aggregate field's column already carries its
+    * source value. */
+  private def aggregated(planned: DataFrame, m: ETLMapping): DataFrame = {
     val (aggFms, rowFms) = m.fieldMappings.partition(_.transformType == "aggregate")
     require(aggFms.nonEmpty, "aggregatePlan needs at least one aggregate field")
-    val schema = df.columns.toSet - LINE
     val groupBys = aggFms.map(_.config.get("group_by") match {
       case Some(l: List[_]) => l.map(String.valueOf)
       case Some(s: String)  => Seq(s)
@@ -140,27 +167,17 @@ object Runner {
     val groupBy = groupBys.head
     require(groupBys.forall(_ == groupBy),
       s"all aggregate fields must share one group_by; saw ${groupBys.distinct}")
-    val cm = TransformCompiler.compile(m.copy(fieldMappings = rowFms), schema)
-    val rowDests = cm.destOrder.toSet
+    val rowDests = rowFms.map(_.destinationField).toSet
     require(groupBy.forall(rowDests.contains),
       s"group_by names destination fields; missing: ${groupBy.filterNot(rowDests.contains)}")
 
-    def srcOf(fm: FieldMapping): Column =
-      TransformCompiler.compileField(fm.copy(transformType = "direct"), schema).value
     // H5 lenient float (revolut_stocks.py:104-111): strip commas, 0.0 fallback
     def h5(c: Column): Column =
       coalesce(regexp_replace(c.cast("string"), ",", "").try_cast("double"), lit(0.0))
 
-    val keyCols = cm.fields.filter { case (d, _) => groupBy.contains(d) }
-      .map { case (d, c) => c.as(d) }
-    val aggIns = aggFms.zipWithIndex.map { case (fm, i) =>
-      srcOf(fm).as(s"__agg_in_$i")
-    }
-    val base = df.filter(!cm.skip).select(keyCols ++ aggIns: _*)
-
     val dec = "decimal(38,12)"
-    val aggExprs = aggFms.zipWithIndex.map { case (fm, i) =>
-      val in = col(s"__agg_in_$i")
+    val aggExprs = aggFms.map { fm =>
+      val in = col(fm.destinationField)
       fm.config.get("agg").map(String.valueOf).getOrElse("count") match {
         case "sum" =>
           CsvSink.money8Udf(coalesce(sum(h5(in).cast(dec)), lit(0).cast(dec))
@@ -177,7 +194,7 @@ object Runner {
             s"aggregate field '${fm.destinationField}': unknown agg '$other'")
       }
     }
-    val grouped = base.groupBy(groupBy.map(col): _*)
+    val grouped = planned.filter(!col(SKIP)).groupBy(groupBy.map(col): _*)
       .agg(aggExprs.head, aggExprs.tail: _*)
     // output order = field_mappings first-occurrence order over the
     // surviving destinations (§1.3.4 header convention)
@@ -186,121 +203,43 @@ object Runner {
     grouped.select(outOrder.map(col): _*)
   }
 
+  /** What a mapping writes, from its annotated plan: the kept rows in
+    * destination order or, for an aggregate mapping (t12), the grouped
+    * frame sorted by group key so the single-file output is deterministic. */
+  private[engine] def output(planned: DataFrame, m: ETLMapping): DataFrame =
+    if (hasAggregates(m)) {
+      val out = aggregated(planned, m)
+      val keys = out.columns.filterNot(c =>
+        m.fieldMappings.exists(fm =>
+          fm.destinationField == c && fm.transformType == "aggregate"))
+      if (keys.isEmpty) out else out.orderBy(keys.map(col): _*)
+    } else {
+      val dests = planned.columns.filterNot(Set(LINE, SKIP, ERRS))
+      planned.filter(!col(SKIP)).select(dests.map(col): _*)
+    }
+
   /** Transform + conditional write (reference transform_file,
     * dynamic.py:267-278, 334-343): output written only when there are
     * surviving rows AND (no errors OR !failOnError); errored rows are still
     * written when the gate allows (quirk Q4).
     *
-    * The two-phase gate needs error counts before writing — `cache()` here;
-    * at 100 TB swap for `observe()` metrics + quarantine-path rewrite.
+    * One pass: the gate's counters are observed on the annotated plan while
+    * the output is written in parallel to staging; the file is published
+    * only if the gate then passes (for aggregate mappings the gate stays
+    * row-level, observed below the grouping). Per-row error detail takes a
+    * second pass, only when there are errors.
     */
   def convert(df: DataFrame, m: ETLMapping, outFile: String,
-              failOnError: Boolean = true): TransformResult = {
-    val planned = plan(df, m).cache()
-    try {
-      val (result, counts) = summarize(planned, m, collectErrors = true)
-      val fields = TransformCompiler.compile(m, df.columns.toSet - LINE).destOrder
-      // reference gate: `results` non-empty (any non-skipped row producing a
-      // non-empty dict) and no errors unless failOnError is off
-      val anyRows = fields.nonEmpty && (counts.total - counts.skipped) > 0
-      val shouldWrite = anyRows && (result.errorCount == 0 || !failOnError)
-      if (shouldWrite) {
-        if (hasAggregates(m)) {
-          // t12: the written output is the grouped frame (header = its
-          // field_mappings-ordered columns), sorted by group key so the
-          // single-file output is deterministic; the gate/counters above
-          // stay row-level, computed on the pre-aggregation plan
-          val out = aggregatePlan(df, m)
-          val keys = out.columns.filterNot(c =>
-            m.fieldMappings.exists(fm =>
-              fm.destinationField == c && fm.transformType == "aggregate"))
-          val sorted = if (keys.isEmpty) out else out.orderBy(keys.map(col): _*)
-          CsvSink.writeSingleFile(sorted, out.columns.toSeq, outFile)
-        } else {
-          val kept = planned.filter(!col(SKIP))
-          CsvSink.writeSingleFile(kept.select(fields.map(col): _*), fields, outFile)
-        }
-        result.copy(written = true)
-      } else result
-    } finally planned.unpersist()
-  }
-
-  /** Scale-mode convert: ONE pass instead of cache + count + write. The
-    * plan streams straight to a directory sink (no single-file coalesce, no
-    * caching of the whole input) while `observe()` accumulates the gate
-    * metrics on the same pass; if the fail-on-error gate then trips, the
-    * output directory is deleted (cheap metadata op) — the quarantine-commit
-    * pattern for inputs that don't fit in cache at 100 TB.
-    *
-    * Returns the same counters as `convert` (without per-row error detail —
-    * at scale errors go to `errorDataset` jobs, not driver lists). */
-  def convertAtScale(df: DataFrame, m: ETLMapping, outDir: String,
-                     failOnError: Boolean = true): TransformResult = {
-    val fields = TransformCompiler.compile(m, df.columns.toSet - LINE).destOrder
-    // unique per call: concurrent converts in one session must not
-    // cross-capture each other's observed metrics
-    val gateName = s"etl_gate_${java.util.UUID.randomUUID().toString.take(8)}"
-    val observed = plan(df, m)
-      .observe(gateName,
-        coalesce(sum(when(col(SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
-        coalesce(sum(when(!col(SKIP) && size(col(ERRS)) === 0, 1L).otherwise(0L)), lit(0L)).as("clean"),
-        coalesce(sum(when(!col(SKIP), size(col(ERRS)).cast("long")).otherwise(0L)), lit(0L)).as("errs"),
-        count(lit(1)).as("total"))
-    val kept = observed.filter(!col(SKIP)).select(fields.map(col): _*)
-    // observed metrics surface on the EXECUTED QueryExecution (the write's),
-    // delivered async via the listener bus — capture and await them
-    val spark = df.sparkSession
-    val captured = new java.util.concurrent.atomic.AtomicReference[Option[org.apache.spark.sql.Row]](None)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.get(gateName).foreach(r => captured.compareAndSet(None, Some(r)))
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
+              failOnError: Boolean = true): TransformResult =
+    // an empty mapping writes nothing: every row is skipped
+    if (m.fieldMappings.isEmpty) validate(df, m)
+    else {
+      val planned = plan(df, m)
+      val gate = Observation()
+      val out = output(observe(planned, gate), m)
+      lazy val c = Counts.of(gate, planned)
+      val written = CsvSink.writeSingleFile(out, out.columns.toSeq, outFile,
+        publish = _ => c.survivors > 0 && (c.errs == 0 || !failOnError)).isDefined
+      result(m, c, if (c.errs > 0) errorDetail(planned) else Nil, written)
     }
-    spark.listenerManager.register(listener)
-    // stage-then-commit: the job writes to a staging dir; only a passing
-    // gate publishes it (atomic directory move), so readers can never
-    // observe a torn or gate-failed output at outDir
-    val staging = outDir + ".__staging__"
-    val metrics = try {
-      CsvSink.write(kept, fields, staging)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (captured.get().isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      captured.get().getOrElse(sys.error(s"$gateName metrics not delivered within 30s"))
-    } finally spark.listenerManager.unregister(listener)
-    val (skipped, clean, errs, total) =
-      (metrics.getLong(0), metrics.getLong(1), metrics.getLong(2), metrics.getLong(3))
-    val anyRows = fields.nonEmpty && (total - skipped) > 0
-    val keep = anyRows && (errs == 0 || !failOnError)
-    def rmTree(dir: String): Unit = {
-      val p = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    }
-    if (keep) {
-      rmTree(outDir)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(outDir),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } else rmTree(staging)
-    if (m.fieldMappings.isEmpty) TransformResult(0L, total, 0L, Nil, written = false)
-    else TransformResult(clean, skipped, errs, Nil, written = keep)
-  }
-
-  /** Typed error dataset for downstream analysis (explode of the error
-    * column — reference errors list). */
-  def errorDataset(df: DataFrame, m: ETLMapping): Dataset[RowError] = {
-    import df.sparkSession.implicits._
-    val planned = plan(df, m)
-    planned.filter(!col(SKIP) && size(col(ERRS)) > 0)
-      .select(col(LINE), explode(col(ERRS)).as("e"))
-      .select(col(LINE).as("line_number"), col("e.field"),
-              col("e.error_message"), col("e.source_value"))
-      .as[RowError]
-  }
 }
