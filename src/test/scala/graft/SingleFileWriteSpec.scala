@@ -67,7 +67,7 @@ class SingleFileWriteSpec extends AnyFunSuite {
     (f.toString, ("city,total,mean,n" +: expected).mkString("", "\n", "\n"))
   }
 
-  test("split input: parts join in partition order to the one-split bytes and the golden; counts equal validate's") {
+  test("split input: parts join in order to the one-split bytes and the golden") {
     val (aggIn, aggGold) = aggFixture()
     val cases = Seq(
       ("kitchen", s"$res/fixtures/kitchen.csv", mapping("kitchen"),
@@ -95,7 +95,7 @@ class SingleFileWriteSpec extends AnyFunSuite {
     }
   }
 
-  test("a gated convert leaves no output, staging or temp file, and an existing output untouched") {
+  test("a gated convert leaves no output or temp file; an existing one untouched") {
     val m = mapping("kitchen_gate")
     val in = s"$res/fixtures/kitchen_gate.csv"
     def leftovers(out: Path) =
