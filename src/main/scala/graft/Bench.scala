@@ -8,24 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 356 queries share one JVM: the ContextCleaner needs GC activity to
-      // release finished broadcasts/caches. Round-14 A/B series: a 30s/120s
-      // FULL-collection timer landed inside whatever query window it struck
-      // (isolated 4-6× outliers on arbitrary sub-second entries, gc_s up to
-      // 43), and an explicit between-query System.gc() every 16 queries was
-      // worse still (gc_s 48). The staging/cache churn already drives
-      // regular young collections that feed the cleaner's reference queue,
-      // so the timer is parked at 30min as a safety net only — measured
-      // best of the three regimes (105.3s / gc 11.6 vs 123-168s before).
-      .config("spark.cleaner.periodicGC.interval", "30min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // warmup: exercise scan→shuffle→sort→window codegen paths once, untimed
     try {
       SparkEntry.entry(spark).count()

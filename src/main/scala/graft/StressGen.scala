@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev utility: replicate the driver testdata K× with CONSISTENT key shifts
@@ -14,11 +14,7 @@ object StressGen {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, kStr) = args
     val k = kStr.toInt
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val t = Tables(spark, src)
 
     def rep(df: DataFrame, keys: Seq[String])(write: String): Unit = {

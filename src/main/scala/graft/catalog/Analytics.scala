@@ -810,7 +810,7 @@ object Analytics extends QueryPack {
     * temp t). Each level maps column → expression over the previous
     * level's columns; both engines consume the same strings — only the
     * xor spelling differs (Spark `^`, DuckDB xor()). */
-  private def hilbertLevels(xor: (String, String) => String): Seq[Map[String, String]] = {
+  private[graft] def hilbertLevels(xor: (String, String) => String): Seq[Map[String, String]] = {
     val qs = Seq(128, 64, 32, 16, 8, 4, 2)
     val undo = qs.flatMap { q =>
       val p = (q - 1).toString
@@ -835,7 +835,7 @@ object Analytics extends QueryPack {
 
   /** Bit-interleave of the transpose: X0 carries each 3-bit group's high
     * bit, yielding the standard 24-bit Hilbert index. */
-  private def hilbertInterleave(div: String): String =
+  private[graft] def hilbertInterleave(div: String): String =
     (0 until 8).flatMap { q =>
       Seq(s"((x0 $div ${1L << q}) % 2) * ${1L << (3 * q + 2)}",
           s"((x1 $div ${1L << q}) % 2) * ${1L << (3 * q + 1)}",
@@ -844,7 +844,8 @@ object Analytics extends QueryPack {
 
   /** h = hilbert(x, y, w) appended to `base` (columns x, y, w) — the
     * native HilbertIndex24 kernel (round 15): the chained-projection form
-    * below cost ~1.3 s of single-task CPU per scan of the local fixture;
+    * of hilbertLevels (now test code, HilbertKernelSpec.hilbertIndexChained)
+    * cost ~1.3 s of single-task CPU per scan of the local fixture;
     * the kernel runs the identical integer transform as one tight loop.
     * private[graft] so HilbertLayoutSpec can pin it against the plain-
     * Scala reference and the z-curve comparison; HilbertKernelSpec pins
@@ -852,19 +853,6 @@ object Analytics extends QueryPack {
   private[graft] def hilbertIndex(base: DataFrame): DataFrame =
     base.withColumn("h", graft.functions.SpatialKernels.hilbert24(
       col("x").cast("long"), col("y").cast("long"), col("w").cast("long")))
-
-  /** The chained-projection pipeline the kernel replaced: each level is one
-    * narrow Project, whole-stage codegen compiles the transform to
-    * straight-line integer code. Kept as the kernel's executable
-    * specification (HilbertKernelSpec) and the shape hilbertSql mirrors. */
-  private[graft] def hilbertIndexChained(base: DataFrame): DataFrame = {
-    var df = base.selectExpr("x", "y", "w", "x AS x0", "y AS x1", "w AS x2")
-    hilbertLevels((a, b) => s"($a ^ $b)").foreach { lvl =>
-      val cols = (df.columns.toSeq ++ lvl.keys.filterNot(df.columns.contains)).distinct
-      df = df.selectExpr(cols.map(c => s"${lvl.getOrElse(c, c)} AS $c"): _*)
-    }
-    df.selectExpr("x", "y", "w", s"${hilbertInterleave("div")} AS h")
-  }
 
   /** The identical chain as nested-subquery DuckDB SQL over `src` (x,y,w). */
   private def hilbertSql(src: String): String = {

@@ -3,6 +3,7 @@ package graft.cli
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
 import graft.builtin.Revolut
 import graft.engine.CsvSource
 import graft.spec.FileSpec
@@ -19,8 +20,15 @@ import graft.spec.FileSpec
   */
 object Main {
   def main(args: Array[String]): Unit = {
-    val accountName = args.headOption
-    val dataDir = sys.env.getOrElse("GRAFT_DATA_DIR", "data")
+    val spark = GraftSession(master = sys.env.get("SPARK_MASTER"))
+    try run(spark, sys.env.getOrElse("GRAFT_DATA_DIR", "data"), args.headOption)
+    finally spark.stop()
+  }
+
+  /** Converts every CSV in `dataDir/in/revolut_{stocks,crypto}` to
+    * `dataDir/out/ghostfolio/{stem}_ghostfolio.csv` and returns the total
+    * number of activities written. */
+  def run(spark: SparkSession, dataDir: String, accountName: Option[String]): Long = {
     val inputDir = Paths.get(dataDir, "in")
     val outputDir = Paths.get(dataDir, "out")
 
@@ -34,14 +42,6 @@ object Main {
     println(s"Output: ${outputDir.toAbsolutePath}")
     println("=" * 40)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     var total = 0L
     total += processDir(spark, inputDir.resolve("revolut_stocks"),
       outputDir.resolve("ghostfolio"), "stocks",
@@ -52,7 +52,7 @@ object Main {
 
     println("=" * 40)
     println(s"Total activities converted: $total")
-    spark.stop()
+    total
   }
 
   private def processDir(spark: SparkSession, in: Path, outDir: Path,

@@ -4,20 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for all suites (local[4] keeps test startup cheap;
-  * production sessions are configured by the driver's Verify/Bench mains). */
+/** Shared local session for all suites, built by `GraftSession` like every
+  * main's; local[4] keeps test startup cheap and the partition count fixed. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4)
   val sf: String = "/root/testdata/sf0.001"
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The native HilbertIndex24 kernel must reproduce EXACTLY the chained
@@ -15,7 +16,7 @@ class HilbertKernelSpec extends AnyFunSuite {
 
   private def compare(coords: Seq[(Long, Long, Long)]): Unit = {
     val base = coords.toDF("x", "y", "w")
-    val chained = catalog.Analytics.hilbertIndexChained(base)
+    val chained = HilbertKernelSpec.hilbertIndexChained(base)
       .select($"x", $"y", $"w", $"h".as("h_chain"))
     val kernel = catalog.Analytics.hilbertIndex(base)
       .select($"x", $"y", $"w", $"h".as("h_kernel"))
@@ -60,5 +61,21 @@ class HilbertKernelSpec extends AnyFunSuite {
       oldF.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
         spark.conf.set("spark.sql.codegen.factoryMode", _))
     }
+  }
+}
+
+object HilbertKernelSpec {
+  /** The chained-projection pipeline the kernel replaced: each level of
+    * `Analytics.hilbertLevels` is one narrow Project, whole-stage codegen
+    * compiles the transform to straight-line integer code. Kept as the
+    * kernel's executable specification; `Analytics.hilbertSql` is the same
+    * chain in the oracle's SQL. */
+  def hilbertIndexChained(base: DataFrame): DataFrame = {
+    var df = base.selectExpr("x", "y", "w", "x AS x0", "y AS x1", "w AS x2")
+    catalog.Analytics.hilbertLevels((a, b) => s"($a ^ $b)").foreach { lvl =>
+      val cols = (df.columns.toSeq ++ lvl.keys.filterNot(df.columns.contains)).distinct
+      df = df.selectExpr(cols.map(c => s"${lvl.getOrElse(c, c)} AS $c"): _*)
+    }
+    df.selectExpr("x", "y", "w", s"${catalog.Analytics.hilbertInterleave("div")} AS h")
   }
 }

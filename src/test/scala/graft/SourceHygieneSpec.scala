@@ -1,19 +1,33 @@
 package graft
 
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source files stay plain text: a raw NUL byte makes grep and ripgrep
   * treat the whole file as binary and silently drop it from searches.
-  * Write the character as the `\u0000` escape instead. */
+  * Write the character as the `\u0000` escape instead. Sessions come from
+  * one factory, so their policy is set in one place. */
 class SourceHygieneSpec extends AnyFunSuite {
-  test("no Scala source file contains a NUL byte") {
+  private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
-    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-                  finally walk.close()
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("no Scala source file contains a NUL byte") {
     assert(sources.nonEmpty)
     val withNul = sources.filter((p: Path) => Files.readAllBytes(p).contains(0.toByte))
     assert(withNul.isEmpty, s"NUL bytes in: ${withNul.mkString(", ")}")
+  }
+
+  test("only GraftSession builds a SparkSession") {
+    val factory = Paths.get("src/main/scala/graft/GraftSession.scala")
+    assert(sources.contains(factory))
+    val call = "SparkSession" + ".builder" // split so this file does not match
+    val builders = sources.filter(p =>
+      p != factory && Files.readString(p, ISO_8859_1).contains(call))
+    assert(builders.isEmpty, s"$call outside GraftSession in: ${builders.mkString(", ")}")
   }
 }
