@@ -1,8 +1,11 @@
 package graft.builtin
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{CsvSink, PyFormat}
+import graft.engine.{CsvSink, CsvSource}
+import graft.engine.CsvSink.money8Udf
+import graft.engine.Runner.lenientFloat
+import graft.spec.FileSpec
 
 /** The reference's two hardcoded pipelines (Revolut stocks/crypto →
   * Ghostfolio) re-expressed as compiled Spark column plans — SURVEY.md §2.A
@@ -20,9 +23,6 @@ object Revolut {
   private val GhostfolioFields = Seq(
     "date", "symbol", "type", "quantity", "unitPrice", "fee", "currency",
     "account", "dataSource")
-
-  /** f"{v:.8f}".rstrip("0").rstrip(".") — ghostfolio.py:48-51. */
-  private val money8 = udf((d: Double) => PyFormat.money8(d))
 
   /** The extractors read columns via `row.get(name, "")` — a column missing
     * from the export entirely behaves exactly like an empty cell
@@ -47,15 +47,13 @@ object Revolut {
       "")
 
   // ---- shared lenient parsers -------------------------------------------
-
-  /** H5 — revolut_stocks.py:104-111: strip commas; empty/bad → 0.0. */
-  def parseFloat(c: Column): Column =
-    coalesce(regexp_replace(c, ",", "").try_cast("double"), lit(0.0))
+  // (H5, the plain lenient float, is engine.Runner.lenientFloat; money
+  // values render through engine.CsvSink.money8Udf — ghostfolio.py:48-51)
 
   /** H6 — revolut_stocks.py:113-126: strip ONE leading currency-code prefix
     * then lenient float. */
   def parsePrice(c: Column): Column =
-    parseFloat(regexp_replace(c, "^(USD|EUR|GBP) ", ""))
+    lenientFloat(regexp_replace(c, "^(USD|EUR|GBP) ", ""))
 
   /** H7 — revolut_crypto.py:140-151: strip €$£ and commas anywhere, abs,
     * empty/bad → 0.0. */
@@ -179,33 +177,12 @@ object Revolut {
         parseDateStocks(f("Date")).as("date"),
         mapStocksSymbol(f("Ticker"), col("__ccy")).as("symbol"),
         col("__gftype").as("type"),
-        money8(parseFloat(f("Quantity"))).as("quantity"),
-        money8(parsePrice(f("Price per share"))).as("unitPrice"),
-        money8(lit(0.0)).as("fee"),
+        money8Udf(lenientFloat(f("Quantity"))).as("quantity"),
+        money8Udf(parsePrice(f("Price per share"))).as("unitPrice"),
+        money8Udf(lit(0.0)).as("fee"),
         col("__ccy").as("currency"),
         lit(accountName).as("account"),
         lit("").as("dataSource")) ++ keep.map(col): _*)
-  }
-
-  /** S2 scale mode: ONE Spark job over a whole directory of export CSVs,
-    * per-file provenance via input_file_name, one output directory per
-    * source file (partitionBy) — replaces the driver-side per-file loop at
-    * scale (SURVEY.md §2.A S2/O2). Returns rows written per source stem. */
-  def processStocksGlob(spark: org.apache.spark.sql.SparkSession,
-                        inGlob: String, outDir: String,
-                        accountName: String = "Revolut Stocks"): Map[String, Long] = {
-    val raw = graft.engine.CsvSource.read(spark, inGlob, graft.spec.FileSpec("g", "g"))
-      .withColumn("src_file",
-        regexp_extract(input_file_name(), "([^/]+)\\.csv", 1))
-    val planned = stocksPlan(raw, accountName, keep = Seq("src_file"))
-    planned.write
-      .partitionBy("src_file")
-      .option("header", value = true)
-      .option("escape", "\"").option("emptyValue", "").option("nullValue", "")
-      .mode("overwrite")
-      .csv(outDir)
-    planned.groupBy("src_file").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   // ---- crypto pipeline (revolut_crypto.py) ------------------------------
@@ -244,26 +221,31 @@ object Revolut {
         parseDateCrypto(f("Date")).as("date"),
         mapCryptoSymbol(upper(f("Symbol"))).as("symbol"),
         col("__gftype").as("type"),
-        money8(parseFloat(f("Quantity"))).as("quantity"),
-        money8(parseMoney(f("Price"))).as("unitPrice"),
-        money8(parseMoney(f("Fees"))).as("fee"),
+        money8Udf(lenientFloat(f("Quantity"))).as("quantity"),
+        money8Udf(parseMoney(f("Price"))).as("unitPrice"),
+        money8Udf(parseMoney(f("Fees"))).as("fee"),
         detectCurrency(f("Price"), f("Value")).as("currency"),
         lit(accountName).as("account"),
         lit("YAHOO").as("dataSource")) ++ keep.map(col): _*)
   }
 
-  /** S2 scale mode for crypto exports (see processStocksGlob). */
-  def processCryptoGlob(spark: org.apache.spark.sql.SparkSession,
-                        inGlob: String, outDir: String,
-                        accountName: String = "Revolut Crypto"): Map[String, Long] = {
-    val raw = graft.engine.CsvSource.read(spark, inGlob, graft.spec.FileSpec("g", "g"))
+  /** S2 scale mode: ONE Spark job over a whole directory of export CSVs,
+    * per-file provenance via input_file_name, one output directory per
+    * source file (partitionBy) — replaces the driver-side per-file loop at
+    * scale (SURVEY.md §2.A S2/O2). `plan` is `stocksPlan` or `cryptoPlan`
+    * with its account name, given the columns to keep. Cells are written
+    * with the per-file writer's options, so they keep their whitespace.
+    * Returns rows written per source stem. */
+  def processGlob(spark: SparkSession, inGlob: String, outDir: String,
+                  plan: (DataFrame, Seq[String]) => DataFrame): Map[String, Long] = {
+    val raw = CsvSource.read(spark, inGlob, FileSpec("g", "g"))
       .withColumn("src_file",
         regexp_extract(input_file_name(), "([^/]+)\\.csv", 1))
-    val planned = cryptoPlan(raw, accountName, keep = Seq("src_file"))
+    val planned = plan(raw, Seq("src_file"))
     planned.write
       .partitionBy("src_file")
+      .options(CsvSink.csvOptions(GhostfolioFields.length, ","))
       .option("header", value = true)
-      .option("escape", "\"").option("emptyValue", "").option("nullValue", "")
       .mode("overwrite")
       .csv(outDir)
     planned.groupBy("src_file").count()

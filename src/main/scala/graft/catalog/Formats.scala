@@ -840,12 +840,13 @@ object Formats extends QueryPack {
     // k30: SPEC-DRIVEN DATASOURCE V2 SINK — k22's connector closing the
     // loop on the DESTINATION side (the reference's K1/K2 sink semantics
     // as a V2 `SupportsWrite`): header + column ORDER from the spec,
-    // RFC-4180 quoting, per-task write-then-rename so failed tasks never
-    // leave readable partials, `overwrite` = V2 truncate. The round trip
-    // goes OUT through the custom writer and BACK through the custom
-    // reader; the oracle aggregates the original parquet, so a green row
-    // pins the writer's rendering (typed longs through toString, quoted
-    // strings) against an engine that never saw the files.
+    // csv-module quoting (engine/PyCsv), per-task write-then-rename so
+    // failed tasks never leave readable partials, `overwrite` = V2
+    // truncate. The round trip goes OUT through the custom writer and
+    // BACK through the custom reader; the oracle aggregates the original
+    // parquet, so a green row pins the writer's rendering (typed longs
+    // through toString, quoted strings) against an engine that never saw
+    // the files.
     "k30_dsv2_spec_sink" -> { (s, dir) =>
       import s.implicits._
       val feed = Scratch.staged(s"k30_csv#$dir", "k30_csv") { p =>

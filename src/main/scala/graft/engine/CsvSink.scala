@@ -49,7 +49,7 @@ object CsvSink {
     df.select(fieldOrder.map(n => pyStringify(df, n).as(n)): _*)
 
   /** Writer options, shared by the part files and the header. */
-  private def csvOptions(columns: Int, delimiter: String): Map[String, String] = {
+  private[graft] def csvOptions(columns: Int, delimiter: String): Map[String, String] = {
     // csv.writer quirk: an empty (or None) value in a ONE-column row is
     // written as `""` — a quoted empty — so the record is distinguishable
     // from a blank line; in multi-column rows empties stay unquoted.

@@ -1,8 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.spec.FileSpec
 
 /** CSV ingestion per FileSpec (reference S1/S2, extractors/base.py:8-14,
@@ -10,8 +10,9 @@ import graft.spec.FileSpec
   * runtime is `dict[str, str]`; typed casts happen lazily downstream.
   *
   * Unlike the reference's dynamic engine (which hardcodes UTF-8 + comma,
-  * dynamic.py:298-299 — SURVEY §1.3.6), the spec's delimiter/encoding are
-  * honored here.
+  * dynamic.py:298-299 — SURVEY §1.3.6), `read` and
+  * `readRecordsWithOrdinals` honour the spec's delimiter and encoding;
+  * `readWithLineNumbers`, the path `Api` takes, honours only the delimiter.
   */
 object CsvSource {
 
@@ -48,9 +49,12 @@ object CsvSource {
   /** Provenance path: attaches the reference's 1-based file line numbers
     * (header = line 1, first data row = 2 — dynamic.py:302). Built from a
     * text scan + zipWithIndex (contiguous, unlike
-    * monotonically_increasing_id) and the csv-module-exact `parseLine`
-    * splitter for quoted-field parsing.
+    * monotonically_increasing_id) and `PyCsv.parseLine` for the fields of
+    * each line.
     *
+    * Like the reference's dynamic engine (dynamic.py:298-302), this reader
+    * decodes UTF-8 and takes line 1 as the header whatever the spec's
+    * `encoding` and `has_header` say; only its delimiter is honoured.
     * Assumes no embedded newlines inside quoted fields (same rows the
     * reference's csv.DictReader would see line-aligned); use `read` when
     * line provenance isn't needed — it's the fast path at scale.
@@ -62,8 +66,9 @@ object CsvSource {
       .map { case (l, i) => (l, i + 1) } // 1-based file lines
     val df = spark.createDataFrame(lines).toDF("__line", "__line_number")
     val header = df.filter($"__line_number" === 1).head().getString(0)
-    val colNames = parseHeader(header, spec.delimiter)
-    // Parse with the csv-module-exact splitter instead of from_csv: the
+    val d = spec.delimiter.head
+    val colNames = PyCsv.parseLine(header, d)
+    // Parse with the csv-module splitter instead of from_csv: the
     // reference's DictReader distinguishes a MISSING trailing cell (row
     // shorter than the header → None) from a PRESENT empty cell ("") —
     // lookup's error condition and null-safe filters observe the
@@ -71,8 +76,7 @@ object CsvSource {
     // both to null (and needs escape wiring for `""`). A deterministic
     // scalar UDF on this compat/provenance path only; fully distributed
     // (per-line map, no shuffle), and `read` stays the codegen'd fast path.
-    val d = spec.delimiter.head
-    val parseUdf = udf((line: String) => parseLine(line, d))
+    val parseUdf = udf((line: String) => PyCsv.parseLine(line, d))
     df.filter($"__line_number" > 1 && $"__line" =!= "")
       .withColumn("__fields", parseUdf($"__line"))
       .select(col("__line_number") +:
@@ -83,69 +87,24 @@ object CsvSource {
   /** Record-ordinal provenance path: the reference's "line numbers" are
     * really `enumerate(DictReader, start=2)` — RECORD ordinals, which
     * diverge from physical file lines when a quoted field embeds a newline
-    * (dynamic.py:302; pinned by the `multiline` golden). This reader parses
-    * with multiLine=true (whole-file, unsplittable — compat path only; such
-    * CSVs cannot split at scale anyway) and numbers records in file order. */
+    * (dynamic.py:302; pinned by the `multiline` golden). Each file is read
+    * whole in one task (such CSVs cannot split anyway), decoded with the
+    * spec's encoding and parsed by `PyCsv.records`; its first record is the
+    * header and the rest are numbered from 2. A record shorter than the
+    * header leaves the missing cells null (DictReader's None), as
+    * `readWithLineNumbers` does. */
   def readRecordsWithOrdinals(spark: SparkSession, path: String, spec: FileSpec): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.LongType
-    val base = spark.read
-      .option("header", spec.hasHeader)
-      .option("sep", spec.delimiter)
-      .option("encoding", spec.encoding)
-      .option("multiLine", value = true)
-      .option("inferSchema", value = false)
-      .option("escape", "\"") // csv-module doubled-quote dialect
-      .option("mode", "PERMISSIVE")
-      .csv(path)
-    val withOrd = base.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq((i + 2) +: r.toSeq)
-    }
-    val schema = StructType(StructField("__line_number", LongType, nullable = false) +:
-      base.schema.fields.toSeq)
-    val df = spark.createDataFrame(withOrd, schema)
-    df.select(col("__line_number") +:
-      base.columns.toSeq.map(c => coalesce(col(s"`$c`"), lit("")).as(c)): _*)
-  }
-
-  private[engine] def parseHeader(header: String, delimiter: String): Seq[String] =
-    parseLine(header, delimiter.head)
-
-  /** Python-csv-module-exact single-line field split (dialect `excel`,
-    * non-strict): a quote is special only at FIELD START; inside a quoted
-    * field `""` unescapes to one quote; text after a closing quote is
-    * appended literally (`"a"b` → `ab`); quotes inside an unquoted field
-    * are literal (`say "hi"` stays). Returns exactly the fields PRESENT on
-    * the line — callers map absent trailing columns to null (DictReader's
-    * None) and present-but-empty ones to "". */
-  private[graft] def parseLine(line: String, d: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    // 0 = field start, 1 = in unquoted, 2 = in quoted, 3 = after a quote
-    // seen inside a quoted field (closing-or-escape decision pending)
-    var state = 0
-    var i = 0
-    while (i < line.length) {
-      val c = line.charAt(i)
-      state match {
-        case 0 =>
-          if (c == '"') state = 2
-          else if (c == d) out += { val s = cur.toString; cur.clear(); s }
-          else { cur.append(c); state = 1 }
-        case 1 =>
-          if (c == d) { out += cur.toString; cur.clear(); state = 0 }
-          else cur.append(c)
-        case 2 =>
-          if (c == '"') state = 3
-          else cur.append(c)
-        case 3 =>
-          if (c == '"') { cur.append('"'); state = 2 }
-          else if (c == d) { out += cur.toString; cur.clear(); state = 0 }
-          else { cur.append(c); state = 1 }
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.result()
+    val d = spec.delimiter.head
+    val encoding = spec.encoding
+    val texts = spark.sparkContext.binaryFiles(path).values
+      .map(f => new String(f.toArray(), encoding))
+    val header = texts.map(PyCsv.records(_, d).take(1).toSeq.flatten).first()
+    val rows = texts.flatMap(t => PyCsv.records(t, d).drop(1).zipWithIndex.map {
+      case (rec, i) => Row.fromSeq((i + 2L) +: header.indices.map(j =>
+        if (j < rec.length) rec(j) else null))
+    })
+    spark.createDataFrame(rows, StructType(
+      StructField("__line_number", LongType, nullable = false) +:
+        header.map(StructField(_, StringType, nullable = true))))
   }
 }

@@ -2,76 +2,19 @@ package graft.engine
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import scala.collection.mutable.ArrayBuffer
 
 /** Single-row CSV edit — the reference dashboard's preview→edit→revalidate
   * loop (app.py:577-623 `api_update_row`): read the whole file with the
-  * Python csv module's excel dialect, replace the record at `lineNumber`
-  * (header = 1, first record = 2, blank lines skipped — DictReader
-  * semantics), write everything back via DictWriter (QUOTE_MINIMAL, CRLF
-  * terminators, None/missing → empty cell).
+  * Python csv module's excel dialect (`PyCsv`), replace the record at
+  * `lineNumber` (header = 1, first record = 2, blank lines skipped —
+  * DictReader semantics), write everything back via DictWriter
+  * (QUOTE_MINIMAL, CRLF terminators, None/missing → empty cell).
   *
   * This is a driver-side file-mutation utility (the reference edits one row
   * of one file interactively); the distributed read/convert paths are
   * CsvSource/Runner.
   */
 object RowEdit {
-
-  /** Parse text (already universal-newline-translated) into CSV records.
-    * Excel dialect: ',' delimiter, '"' quote recognized at field start,
-    * doubled quotes inside quoted fields, post-quote chars appended
-    * literally; embedded newlines kept inside quotes. Blank lines yield
-    * empty records (callers skip them, like DictReader). */
-  def parseRecords(text: String, delimiter: Char = ','): Vector[Vector[String]] = {
-    val out = Vector.newBuilder[Vector[String]]
-    val rec = ArrayBuffer.empty[String]
-    val cell = new StringBuilder
-    var i = 0
-    var inQuotes = false
-    var cellStarted = false   // true once any char seen in current cell
-    var recStarted = false    // true once current line has any content
-    def endCell(): Unit = {
-      rec += cell.toString; cell.clear(); cellStarted = false
-    }
-    def endRec(): Unit = {
-      if (recStarted || rec.nonEmpty || cellStarted) { endCell(); out += rec.toVector }
-      rec.clear(); recStarted = false
-    }
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (inQuotes) {
-        if (c == '"') {
-          if (i + 1 < n && text.charAt(i + 1) == '"') { cell += '"'; i += 1 }
-          else inQuotes = false
-        } else cell += c
-      } else c match {
-        case '"' if !cellStarted =>
-          inQuotes = true; cellStarted = true; recStarted = true
-        case '"' => cell += '"'   // quote mid-cell is literal (excel dialect)
-        case `delimiter` => recStarted = true; endCell()
-        case '\n' => endRec()
-        case other => cell += other; cellStarted = true; recStarted = true
-      }
-      i += 1
-    }
-    endRec()
-    out.result()
-  }
-
-  /** Python csv QUOTE_MINIMAL cell rendering. */
-  def renderCell(s: String, delimiter: Char = ','): String =
-    if (s.exists(c => c == delimiter || c == '"' || c == '\n' || c == '\r'))
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
-
-  def renderRecords(recs: Seq[Seq[String]], delimiter: Char = ','): String =
-    recs.map { rec =>
-      // Python csv quotes a LONE empty field ('""') so the record is not a
-      // blank line the next reader would skip
-      if (rec.sizeIs == 1 && rec.head.isEmpty) "\"\""
-      else rec.map(renderCell(_, delimiter)).mkString(delimiter.toString)
-    }.map(_ + "\r\n").mkString
 
   /** app.py:577-623: update record `lineNumber` (start=2) with the given
     * column→value map; unmentioned columns keep their values. Returns
@@ -80,10 +23,9 @@ object RowEdit {
                 updatedRow: Map[String, String]): Either[String, Unit] = {
     val p = Paths.get(filePath)
     if (!Files.exists(p)) return Left("File not found")
-    // open(encoding='utf-8') → universal newlines: \r\n and \r become \n
-    val raw = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      .replace("\r\n", "\n").replace('\r', '\n')
-    val records = parseRecords(raw).filter(_.nonEmpty)
+    // open(encoding='utf-8'): PyCsv reads line breaks universally
+    val records = PyCsv.records(
+      new String(Files.readAllBytes(p), StandardCharsets.UTF_8), ',').toVector
     if (records.isEmpty) return Left("Failed to read file: empty")
     val columns = records.head
     val body = records.tail
@@ -97,7 +39,7 @@ object RowEdit {
         columns.zip(padded).map { case (c, v) => updatedRow.getOrElse(c, v) }
       else padded
     }
-    Files.write(p, renderRecords(columns +: updated)
+    Files.write(p, PyCsv.renderRecords(columns +: updated)
       .getBytes(StandardCharsets.UTF_8))
     Right(())
   }

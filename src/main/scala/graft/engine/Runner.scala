@@ -146,6 +146,12 @@ object Runner {
   // group keys — the same plan TPC-H q1 runs; no extra shuffle beyond the
   // groupBy exchange.
 
+  /** H5 lenient float (revolut_stocks.py:104-111): strip commas; empty or
+    * unparsable → 0.0. The aggregate mapping's sum/avg input and the
+    * Revolut plans' number parser. */
+  def lenientFloat(c: Column): Column =
+    coalesce(regexp_replace(c.cast("string"), ",", "").try_cast("double"), lit(0.0))
+
   def hasAggregates(m: ETLMapping): Boolean =
     m.fieldMappings.exists(_.transformType == "aggregate")
 
@@ -171,19 +177,15 @@ object Runner {
     require(groupBy.forall(rowDests.contains),
       s"group_by names destination fields; missing: ${groupBy.filterNot(rowDests.contains)}")
 
-    // H5 lenient float (revolut_stocks.py:104-111): strip commas, 0.0 fallback
-    def h5(c: Column): Column =
-      coalesce(regexp_replace(c.cast("string"), ",", "").try_cast("double"), lit(0.0))
-
     val dec = "decimal(38,12)"
     val aggExprs = aggFms.map { fm =>
       val in = col(fm.destinationField)
       fm.config.get("agg").map(String.valueOf).getOrElse("count") match {
         case "sum" =>
-          CsvSink.money8Udf(coalesce(sum(h5(in).cast(dec)), lit(0).cast(dec))
+          CsvSink.money8Udf(coalesce(sum(lenientFloat(in).cast(dec)), lit(0).cast(dec))
             .cast("double")).as(fm.destinationField)
         case "avg" =>
-          CsvSink.money8Udf(coalesce(sum(h5(in).cast(dec)), lit(0).cast(dec))
+          CsvSink.money8Udf(coalesce(sum(lenientFloat(in).cast(dec)), lit(0).cast(dec))
             .cast("double") / count(lit(1))).as(fm.destinationField)
         case "count" =>
           (if (fm.sourceField.isEmpty) count(lit(1))

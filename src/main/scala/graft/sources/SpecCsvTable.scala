@@ -16,6 +16,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import graft.engine.PyCsv
 import graft.spec.{FileSpec, FilterRule, SpecStore}
 
 /** DataSource V2 connector for the FileSpec system — the reference's
@@ -42,8 +43,9 @@ import graft.spec.{FileSpec, FilterRule, SpecStore}
   * into rows. Partitions are reported from the driver-side glob — one
   * per CSV file (a header-per-file layout is what the reference's batch
   * runner globs too, O2), so read parallelism = file count and each task
-  * streams its file through an RFC-4180 record parser (quotes, doubled
-  * quotes, embedded newlines) in the spec's encoding.
+  * streams its file, in the spec's encoding, through the csv-module
+  * dialect's record parser (engine/PyCsv: quotes, doubled quotes,
+  * embedded newlines).
   *
   * Scale shape (100 TB): planning touches only file metadata; filters and
   * projection run where the bytes are read — rows that the mapping's skip
@@ -123,7 +125,7 @@ object SpecCsvTable {
   /** The reference's skip semantics over an Option cell (None = the rule
     * names a column absent from the spec — Python `row.get(field)`);
     * mirrors compile/FilterCompiler.rulePredicate case for case. */
-  private[sources] def ruleMatches(r: FilterRule, cell: Option[String]): Boolean =
+  private[graft] def ruleMatches(r: FilterRule, cell: Option[String]): Boolean =
     r.operator match {
       case "equals"       => cell == r.value
       case "not_equals"   => cell != r.value
@@ -244,8 +246,8 @@ private[sources] object SpecCsvScan {
 
 /** The DESTINATION side of the spec system as a V2 sink (the reference's
   * K1/K2 semantics: header and column ORDER come from the spec, values
-  * render per the spec's delimiter/encoding with RFC-4180 quoting —
-  * doubled quotes, fields quoted only when they need it). Each task
+  * render per the spec's delimiter/encoding with csv.writer's
+  * QUOTE_MINIMAL quoting — engine/PyCsv — and `\n` line ends). Each task
   * streams its partition into `part-<p>-<t>.csv` via write-then-rename
   * (an in-progress suffix until the task commits, so a failed task never
   * leaves a readable partial file); `mode(overwrite)` maps to V2
@@ -333,34 +335,22 @@ private[sources] class SpecCsvDataWriter(spec: FileSpec, path: String,
     spec.columns.map(c => inSchema.fieldNames.indexOf(c.name)).toArray
   private val delim = spec.delimiter.head
 
-  private def quoteIfNeeded(s: String): String =
-    if (s.indexOf(delim) >= 0 || s.indexOf('"') >= 0 ||
-        s.indexOf('\n') >= 0 || s.indexOf('\r') >= 0)
-      "\"" + s.replace("\"", "\"\"") + "\""
-    else s
-
-  if (spec.hasHeader)
-    out.write(spec.columns.map(c => quoteIfNeeded(c.name))
-      .mkString(spec.delimiter) + "\n")
-
-  override def write(row: InternalRow): Unit = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < srcIdx.length) {
-      if (i > 0) sb.append(delim)
-      val j = srcIdx(i)
-      if (j >= 0 && !row.isNullAt(j)) {
-        val v = inSchema.fields(j).dataType match {
-          case StringType => row.getUTF8String(j).toString
-          case dt => row.get(j, dt).toString
-        }
-        sb.append(quoteIfNeeded(v))
-      }
-      i += 1
-    }
-    sb.append('\n')
-    out.write(sb.toString)
+  private def writeRecord(fields: Seq[String]): Unit = {
+    val sb = new java.lang.StringBuilder
+    PyCsv.appendRecord(sb, fields, delim)
+    out.write(sb.append('\n').toString)
   }
+
+  if (spec.hasHeader) writeRecord(spec.columns.map(_.name))
+
+  override def write(row: InternalRow): Unit =
+    writeRecord(srcIdx.toSeq.map { j =>
+      if (j < 0 || row.isNullAt(j)) ""
+      else inSchema.fields(j).dataType match {
+        case StringType => row.getUTF8String(j).toString
+        case dt => row.get(j, dt).toString
+      }
+    })
 
   override def commit(): WriterCommitMessage = {
     out.close()
@@ -474,10 +464,9 @@ private[sources] class SpecCsvReader(file: String, spec: FileSpec,
     val conf = new Configuration(false)
     confEntries.foreach { case (k, v) => conf.set(k, v) }
     val p = new Path(file)
-    new java.io.BufferedReader(new java.io.InputStreamReader(
-      p.getFileSystem(conf).open(p), spec.encoding))
+    new java.io.InputStreamReader(p.getFileSystem(conf).open(p), spec.encoding)
   }
-  private val records = new CsvRecords(reader, spec.delimiter.head)
+  private val records = PyCsv.records(reader, spec.delimiter.head)
 
   // source-name → record index, resolved from the header (or spec order)
   private val srcNames: Seq[String] =
@@ -501,21 +490,19 @@ private[sources] class SpecCsvReader(file: String, spec: FileSpec,
     current = null
     while (current == null && records.hasNext) {
       val rec = records.next()
-      if (!(rec.length == 1 && rec.head.isEmpty)) { // blank line
-        def get(field: String): String =
-          colPos.get(field).map(cellOf(rec, _)).getOrElse("")
-        def cell(field: String): Option[String] =
-          colPos.get(field).map(cellOf(rec, _))
-        val skipped = rules.exists(r => SpecCsvTable.ruleMatches(r, cell(r.field)))
-        if (!skipped && pushed.forall(SpecCsvTable.evalFilter(_, get))) {
-          val vals = new Array[Any](outSpec.length)
-          var i = 0
-          while (i < outSpec.length) {
-            vals(i) = UTF8String.fromString(cellOf(rec, outSpec(i)))
-            i += 1
-          }
-          current = new GenericInternalRow(vals)
+      def get(field: String): String =
+        colPos.get(field).map(cellOf(rec, _)).getOrElse("")
+      def cell(field: String): Option[String] =
+        colPos.get(field).map(cellOf(rec, _))
+      val skipped = rules.exists(r => SpecCsvTable.ruleMatches(r, cell(r.field)))
+      if (!skipped && pushed.forall(SpecCsvTable.evalFilter(_, get))) {
+        val vals = new Array[Any](outSpec.length)
+        var i = 0
+        while (i < outSpec.length) {
+          vals(i) = UTF8String.fromString(cellOf(rec, outSpec(i)))
+          i += 1
         }
+        current = new GenericInternalRow(vals)
       }
     }
     current != null
@@ -523,58 +510,4 @@ private[sources] class SpecCsvReader(file: String, spec: FileSpec,
 
   override def get(): InternalRow = current
   override def close(): Unit = reader.close()
-}
-
-/** Streaming RFC-4180 record iterator: fields split on `delim` outside
-  * quotes, doubled quotes inside quotes are literal, records end at a
-  * newline outside quotes (embedded newlines stay inside the field). */
-private[sources] class CsvRecords(in: java.io.Reader, delim: Char)
-    extends Iterator[IndexedSeq[String]] {
-  private var nextRec: IndexedSeq[String] = _
-  private var eof = false
-  advance()
-
-  private def advance(): Unit = {
-    nextRec = null
-    if (eof) return
-    val fields = Vector.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var sawAny = false
-    var done = false
-    while (!done) {
-      val ci = in.read()
-      if (ci < 0) {
-        eof = true
-        if (sawAny || cur.nonEmpty) { fields += cur.result(); nextRec = fields.result() }
-        done = true
-      } else {
-        val c = ci.toChar
-        sawAny = true
-        if (inQ) {
-          if (c == '"') {
-            // peek for a doubled quote
-            in.mark(1)
-            val n = in.read()
-            if (n == '"') cur.append('"')
-            else { inQ = false; if (n >= 0) in.reset() }
-          } else cur.append(c)
-        } else c match {
-          case '"' => inQ = true
-          case `delim` => fields += cur.result(); cur.clear()
-          case '\r' => // swallow; \n closes the record
-          case '\n' =>
-            fields += cur.result()
-            nextRec = fields.result()
-            done = true
-          case other => cur.append(other)
-        }
-      }
-    }
-  }
-
-  override def hasNext: Boolean = nextRec != null
-  override def next(): IndexedSeq[String] = {
-    val r = nextRec; advance(); r
-  }
 }

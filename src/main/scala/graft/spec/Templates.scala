@@ -2,7 +2,7 @@ package graft.spec
 
 import java.nio.charset.Charset
 import java.nio.file.{Files, Paths}
-import graft.engine.RowEdit
+import graft.engine.PyCsv
 
 /** Template CSV generation — app.py:715-747
   * `_create_spec_directory_and_template`: when a spec is created, its input
@@ -26,7 +26,7 @@ object Templates {
   /** Header + example row, csv.writer bytes (QUOTE_MINIMAL, CRLF). */
   def templateCsv(spec: FileSpec): String = {
     val delim = spec.delimiter.headOption.getOrElse(',')
-    RowEdit.renderRecords(
+    PyCsv.renderRecords(
       Seq(spec.columns.map(_.name), spec.columns.map(dummyValue)), delim)
   }
 

@@ -18,7 +18,7 @@ class EtlParitySpec extends AnyFunSuite {
     Files.readString(Paths.get(s"$res/golden/$name"))
 
   // "multiline" exercises record-ordinal line numbers (embedded newline in
-  // a quoted field) via the multiLine reader; the rest use the fast
+  // a quoted field) via the whole-file record reader; the rest use the fast
   // physical-line reader (equivalent when 1 record = 1 line).
   private val cases = Seq("stocks_dynamic", "crypto_dynamic", "kitchen",
                           "kitchen_gate", "filters", "multiline")

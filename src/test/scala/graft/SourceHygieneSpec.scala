@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source files stay plain text: a raw NUL byte makes grep and ripgrep
   * treat the whole file as binary and silently drop it from searches.
   * Write the character as the `\u0000` escape instead. Sessions come from
-  * one factory, so their policy is set in one place. */
+  * one factory, so their policy is set in one place. CSV text is read and
+  * written by one codec, engine/PyCsv, so the dialect is kept in one
+  * place. */
 class SourceHygieneSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
@@ -29,5 +31,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     val builders = sources.filter(p =>
       p != factory && Files.readString(p, ISO_8859_1).contains(call))
     assert(builders.isEmpty, s"$call outside GraftSession in: ${builders.mkString(", ")}")
+  }
+
+  test("only PyCsv quotes CSV cells or parses multi-line CSV records") {
+    val codec = Paths.get("src/main/scala/graft/engine/PyCsv.scala")
+    assert(sources.contains(codec))
+    // a hand-rolled cell quote, and Spark's multiLine CSV reader (a second
+    // record parser)
+    val copies = Seq("""replace("\"", "\"\"")""", "\"multiLine\"")
+    val offenders = sources.filter(p =>
+      p.startsWith(Paths.get("src/main")) && p != codec &&
+        copies.exists(Files.readString(p, ISO_8859_1).contains))
+    assert(offenders.isEmpty, s"CSV dialect code outside PyCsv in: ${offenders.mkString(", ")}")
   }
 }

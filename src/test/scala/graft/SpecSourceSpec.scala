@@ -262,4 +262,58 @@ class SpecSourceSpec extends AnyFunSuite {
     assert(got == twin && got.nonEmpty,
       s"connector diverged from the engine path (sizes ${got.size}/${twin.size})")
   }
+
+  private def specJsonOf(names: String*): String =
+    graft.spec.SpecJson.dumps(graft.spec.SpecJson.fileSpecDict(graft.spec.FileSpec(
+      id = "q", name = "q", columns = names.map(graft.spec.ColumnSpec(_)))))
+
+  test("k22: quotes inside unquoted fields read as the csv module reads them") {
+    val dir = Scratch.dir("specsrc_midquote")
+    // Python's csv.reader: a quote opens a quoted field only at field start
+    java.nio.file.Files.writeString(dir.resolve("f.csv"),
+      "k,v\n1,say \"hi\"\n2,a\"\"b\n3,\"a\"b\n")
+    val got = spark.read.format("graft.sources.SpecCsvTable")
+      .option("spec", specJsonOf("k", "v")).option("path", s"$dir/*.csv").load()
+      .collect().map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+    assert(got == Seq(("1", "say \"hi\""), ("2", "a\"\"b"), ("3", "ab")), got.toString)
+  }
+
+  test("k30: a one-column empty value round-trips through the sink") {
+    val out = Scratch.dir("specsink_lone").toString
+    // csv.writer writes a lone empty field as `""`: a bare blank line would
+    // be skipped by the next reader and the row lost
+    Seq("a", "", null).toDF("k").coalesce(1)
+      .write.format("graft.sources.SpecCsvTable")
+      .option("spec", specJsonOf("k")).option("path", out).mode("overwrite").save()
+    val f = new java.io.File(out).listFiles().filter(_.getName.endsWith(".csv")).head
+    assert(java.nio.file.Files.readString(f.toPath) == "k\na\n\"\"\n\"\"\n")
+    val back = spark.read.format("graft.sources.SpecCsvTable")
+      .option("spec", specJsonOf("k")).option("path", s"$out/*.csv").load()
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(back == Seq("", "", "a"), back.toString)
+  }
+
+  test("k22: the connector's skip rules agree with FilterCompiler on every operator") {
+    import graft.compile.FilterCompiler
+    import graft.sources.SpecCsvTable
+    import graft.spec.FilterRule
+    // every operator (plus an unknown one) x value x values x field over a
+    // present value, "", "None" and a missing cell; a rule on a field the
+    // source lacks sees None on the connector and null in FilterCompiler
+    val cells = Seq(Some("x"), Some(""), Some("None"), None)
+    val ops = Seq("equals", "not_equals", "in", "not_in", "is_empty",
+      "is_not_empty", "contains", "no_such_operator")
+    val values = Seq(Some("x"), Some(""), Some("None"), Some("o"), None)
+    val lists = Seq(Nil, Seq("x"), Seq(""), Seq("None"), Seq("x", "", "None"))
+    val rules = for (op <- ops; v <- values; vs <- lists; field <- Seq("f", "absent"))
+      yield FilterRule(field, op, v, vs)
+    val rows = cells.zipWithIndex.map { case (c, i) => (i, c.orNull) }.toDF("i", "f")
+      .select(col("i") +: rules.map(FilterCompiler.rulePredicate(_, Set("i", "f"))): _*)
+      .collect().sortBy(_.getInt(0))
+    assert(rows.length == cells.length)
+    for ((row, cell) <- rows.zip(cells); (r, j) <- rules.zipWithIndex) {
+      val want = SpecCsvTable.ruleMatches(r, if (r.field == "f") cell else None)
+      assert(row.get(j + 1) == want, s"$r on $cell")
+    }
+  }
 }
