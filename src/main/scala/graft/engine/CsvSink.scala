@@ -24,13 +24,14 @@ import scala.jdk.CollectionConverters._
 object CsvSink {
 
   /** CPython str(float) as a Column-level UDF — the single shared instance
-    * (TransformCompiler's formula render uses it too). */
+    * (TransformCompiler's formula render uses it too). It is the convert's
+    * hot path: every formula value is rendered here, by `PyFormat`'s
+    * Schubfach digits with its one-digit rule for subnormals. */
   val pyFloatUdf = udf((d: java.lang.Double) =>
     if (d == null) null else PyFormat.pyFloatStr(d))
 
   /** §1.3.2 money format as a Column (exact CPython `f"{v:.8f}"` rounding —
-    * HALF_EVEN on the binary value — then trailing-zero/dot strip; a
-    * format-boundary UDF like pyFloatUdf, not a hot-path kernel). */
+    * HALF_EVEN on the binary value — then trailing-zero/dot strip). */
   val money8Udf = udf((d: java.lang.Double) =>
     if (d == null) null else PyFormat.money8(d))
 

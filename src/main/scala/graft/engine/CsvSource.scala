@@ -1,5 +1,10 @@
 package graft.engine
 
+import java.io.InputStream
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -55,6 +60,8 @@ object CsvSource {
     * Like the reference's dynamic engine (dynamic.py:298-302), this reader
     * decodes UTF-8 and takes line 1 as the header whatever the spec's
     * `encoding` and `has_header` say; only its delimiter is honoured.
+    * `path` names one file; its header is read on the driver
+    * (`firstLine`), so a one-partition file starts no job until an action.
     * Assumes no embedded newlines inside quoted fields (same rows the
     * reference's csv.DictReader would see line-aligned); use `read` when
     * line provenance isn't needed — it's the fast path at scale.
@@ -65,8 +72,8 @@ object CsvSource {
       .zipWithIndex()
       .map { case (l, i) => (l, i + 1) } // 1-based file lines
     val df = spark.createDataFrame(lines).toDF("__line", "__line_number")
-    val header = df.filter($"__line_number" === 1).head().getString(0)
     val d = spec.delimiter.head
+    val header = firstLine(spark, path)
     val colNames = PyCsv.parseLine(header, d)
     // Parse with the csv-module splitter instead of from_csv: the
     // reference's DictReader distinguishes a MISSING trailing cell (row
@@ -82,6 +89,29 @@ object CsvSource {
       .select(col("__line_number") +:
         colNames.zipWithIndex.map { case (n, i) =>
           try_element_at(col("__fields"), lit(i + 1)).as(n) }: _*)
+  }
+
+  /** Line 1 of the file at `path`, read on the driver so that building the
+    * frame starts no Spark job. It reads as Spark's text source does: a
+    * compressed file is decompressed by the codec its extension names,
+    * Hadoop's `LineReader` ends the line at `\n`, `\r` or `\r\n`, a
+    * leading UTF-8 byte-order mark is dropped (as `LineRecordReader` drops
+    * it) and `Text` decodes UTF-8. An empty file has no header and fails. */
+  private def firstLine(spark: SparkSession, path: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+      .fold[InputStream](raw)(_.createInputStream(raw))
+    try {
+      val line = new Text()
+      if (new LineReader(in).readLine(line) == 0)
+        throw new NoSuchElementException(s"$path has no header line")
+      val b = line.getBytes
+      val bom = line.getLength >= 3 &&
+        b(0) == 0xEF.toByte && b(1) == 0xBB.toByte && b(2) == 0xBF.toByte
+      if (bom) Text.decode(b, 3, line.getLength - 3) else line.toString
+    } finally in.close()
   }
 
   /** Record-ordinal provenance path: the reference's "line numbers" are

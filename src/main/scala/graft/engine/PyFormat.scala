@@ -1,6 +1,7 @@
 package graft.engine
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+import com.fasterxml.jackson.core.io.schubfach.DoubleToDecimal
+import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
 
 /** Python-compatible number → string formatting.
   *
@@ -14,40 +15,57 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
   */
 object PyFormat {
 
-  /** CPython str(float). Java's Double.toString also emits shortest digits
-    * but switches to E-notation at 1e7 and formats exponents differently;
-    * we re-assemble from Java's digits using Python's thresholds. */
+  /** CPython str(float): the shortest digits that round-trip (of several
+    * as short, the closest to the exact value), laid out in fixed notation
+    * for 1e-4 ≤ |x| < 1e16 and as `d[.ddd]e±XX` outside.
+    *
+    * The digits come from jackson-core's Schubfach kernel
+    * (`DoubleToDecimal.toString`, to the `Double.toString` spec of JDK 19+),
+    * parsed out of its `ddd.ddd[E±n]` string. That spec differs from
+    * CPython in one rule: when one digit suffices it may still return two,
+    * if a two-digit decimal lies closer (`4.9E-324` where CPython writes
+    * `5e-324`). So a two-digit result is replaced by the one-digit
+    * HALF_EVEN rounding of the exact value when that rounding round-trips.
+    * It only can for subnormals: a normal double's rounding interval is far
+    * narrower than the gap between a one-digit and a closer two-digit
+    * decimal. */
   def pyFloatStr(d: Double): String = {
     if (d.isNaN) return "nan"
     if (d == Double.PositiveInfinity) return "inf"
     if (d == Double.NegativeInfinity) return "-inf"
     val neg = (d < 0.0) || (d == 0.0 && 1.0 / d < 0)
     val a = math.abs(d)
-    // shortest decimal digits that round-trip to the same double (what
-    // CPython's repr computes; Java's Double.toString is NOT shortest for
-    // subnormals, so search explicitly)
-    val (digits: String, exp10n: Int) =
-      if (a == 0.0) ("0", 0)
-      else {
-        val exact = new JBigDecimal(a)
-        var chosen: JBigDecimal = null
-        var k = 1
-        while (chosen == null && k <= 17) {
-          val c = exact.round(new java.math.MathContext(k, RoundingMode.HALF_EVEN))
-          if (c.doubleValue() == a) chosen = c
-          k += 1
-        }
-        if (chosen == null) chosen = exact
-        val ds = chosen.unscaledValue.abs.toString
-        (ds, ds.length - 1 - chosen.scale)
+    if (a == 0.0) return if (neg) "-0.0" else "0.0"
+    val shortest = DoubleToDecimal.toString(a)
+    val e = shortest.indexOf('E')
+    val end = if (e < 0) shortest.length else e
+    // significant digits with the exponent of the first one: skip the point
+    // and any leading zeros ("0.00123"), then drop trailing zeros ("1.0")
+    val sig = new java.lang.StringBuilder(17)
+    var point = end
+    var lead = 0
+    var i = 0
+    while (i < end) {
+      val c = shortest.charAt(i)
+      if (c == '.') point = i
+      else if (c == '0' && sig.length == 0) lead += 1
+      else sig.append(c)
+      i += 1
+    }
+    var last = sig.length
+    while (sig.charAt(last - 1) == '0') last -= 1
+    var trimmed = sig.substring(0, last)
+    var exp10n = point - 1 - lead +
+      (if (e < 0) 0 else Integer.parseInt(shortest, e + 1, shortest.length, 10))
+    if (trimmed.length == 2 && a < java.lang.Double.MIN_NORMAL) {
+      val one = new JBigDecimal(a).round(new MathContext(1, RoundingMode.HALF_EVEN))
+      if (one.doubleValue == a) {
+        trimmed = one.unscaledValue.toString
+        exp10n = -one.scale
       }
-    val trimmed = digits.reverse.dropWhile(_ == '0').reverse match {
-      case "" => "0"
-      case s  => s
     }
     val s =
-      if (a == 0.0) "0.0"
-      else if (exp10n >= -4 && exp10n < 16) {
+      if (exp10n >= -4 && exp10n < 16) {
         // fixed notation
         if (exp10n >= trimmed.length - 1) {
           trimmed + "0" * (exp10n - trimmed.length + 1) + ".0"
@@ -67,16 +85,6 @@ object PyFormat {
         f"${mant}e$sign${math.abs(exp10n)}%02d"
       }
     if (neg) "-" + s else s
-  }
-
-  /** Python str(x) of an arbitrary cell value for CSV output. */
-  def pyCellStr(v: Any): String = v match {
-    case null           => ""
-    case s: String      => s
-    case d: Double      => pyFloatStr(d)
-    case f: Float       => pyFloatStr(f.toDouble)
-    case b: Boolean     => if (b) "True" else "False"
-    case other          => other.toString
   }
 
   /** Ghostfolio money format: %.8f then strip trailing zeros and dot.

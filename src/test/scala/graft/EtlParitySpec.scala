@@ -94,6 +94,21 @@ class PyFormatSpec extends AnyFunSuite {
       assert(PyFormat.pyFloatStr(v) == want, s"input $v")
     }
   }
+  test("pyFloatStr matches CPython str(float) on the wide golden") {
+    // tools/gen_float_goldens.py: powers of two, subnormals, random bit
+    // patterns, formula quotients and notation-threshold neighbours
+    import scala.jdk.CollectionConverters._
+    val rows = Files.readAllLines(
+      Paths.get("src/test/resources/golden/pyfloat_wide.tsv")).asScala
+    assert(rows.size > 5000)
+    val misses = rows.flatMap { row =>
+      val Array(hex, want) = row.split('\t')
+      val v = java.lang.Double.longBitsToDouble(java.lang.Long.parseUnsignedLong(hex, 16))
+      val got = PyFormat.pyFloatStr(v)
+      if (got == want) None else Some(s"$hex: want $want, got $got")
+    }
+    assert(misses.isEmpty, s"${misses.size} misses, first: ${misses.take(5).mkString("; ")}")
+  }
   test("money8 matches f'{v:.8f}' strip goldens") {
     for ((v, want) <- golden("money8.json")) {
       assert(PyFormat.money8(v) == want, s"input $v")
