@@ -13,9 +13,10 @@ import graft.spec.{SpecJson, SpecStore}
   * reference's config store. */
 class DashboardSpec extends AnyFunSuite {
 
-  private val cfgSrc = "/root/reference/data/config"
+  private val cfgSrc = ReferenceConfig.dir
 
   private lazy val env: (Dashboard, Path, Path, Path) = {
+    ReferenceConfig.assumePresent()
     val cfg = Files.createTempDirectory("dash-cfg")
     val in = Files.createTempDirectory("dash-in")
     val out = Files.createTempDirectory("dash-out")
@@ -266,6 +267,7 @@ class DashboardSpec extends AnyFunSuite {
     }
   }
   test("D5 run history: converts append durable RunRecords served by /api/runs and /runs") {
+    ReferenceConfig.assumePresent()
     // fresh isolated dashboard with a DETERMINISTIC clock — run ids and
     // timestamps must be stable regardless of what other tests ran
     val cfg = Files.createTempDirectory("dash-cfg5")
@@ -354,6 +356,7 @@ class DashboardSpec extends AnyFunSuite {
   }
 
   test("D7 auth overlay: registration enables enforcement; private/share/public; audit") {
+    ReferenceConfig.assumePresent()
     // fresh isolated dashboard: registering a user flips the config dir
     // into auth mode, which must not leak into the shared-dashboard tests
     val cfg = Files.createTempDirectory("dash-cfg7")
@@ -466,6 +469,7 @@ class DashboardSpec extends AnyFunSuite {
   }
 
   test("D7 hardening: pages/files gated, audit scoped, teams, settings, cookie") {
+    ReferenceConfig.assumePresent()
     val cfg = Files.createTempDirectory("dash-cfg7h")
     val inH = Files.createTempDirectory("dash-in7h")
     val outH = Files.createTempDirectory("dash-out7h")

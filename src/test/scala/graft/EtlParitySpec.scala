@@ -68,12 +68,14 @@ class EtlParitySpec extends AnyFunSuite {
   }
 
   test("reference shipped mappings parse from the original JSON") {
-    val ms = SpecStore.loadMappings("/root/reference/data/config/mappings.json")
+    val refCfg = ReferenceConfig.dir
+    ReferenceConfig.assumePresent()
+    val ms = SpecStore.loadMappings(s"$refCfg/mappings.json")
     assert(ms.contains("revolut_stocks_to_ghostfolio"))
     assert(ms("revolut_crypto_to_ghostfolio").fieldMappings.nonEmpty)
-    val specs = SpecStore.loadFileSpecs("/root/reference/data/config/sources.json")
+    val specs = SpecStore.loadFileSpecs(s"$refCfg/sources.json")
     assert(specs("revolut_stocks").columns.map(_.name).contains("Price per share"))
-    val dests = SpecStore.loadFileSpecs("/root/reference/data/config/destinations.json")
+    val dests = SpecStore.loadFileSpecs(s"$refCfg/destinations.json")
     assert(dests.values.exists(_.delimiter == ";")) // teste_destination_1
   }
 }

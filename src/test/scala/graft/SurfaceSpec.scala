@@ -12,11 +12,20 @@ import graft.spec._
   * (app.py:715-747). Goldens under golden/surface were produced by executing
   * the reference's own csv/json calls (see that directory's generator
   * provenance in the round-3 commit).
+  *
+  * The store tests run on config/mappings.json under the test resources, a
+  * copy of the reference's shipped mappings.json that
+  * tools/rebuild_mappings_config.py rebuilds from two goldens: the upsert
+  * golden minus its appended entry, with the original description of
+  * revolut_stocks_to_ghostfolio (golden/stocks_dynamic.mapping.json) put
+  * back. The tests that need the reference's sources.json or
+  * destinations.json cancel where its checkout is absent.
   */
 class SurfaceSpec extends AnyFunSuite {
 
   private val goldenDir = "src/test/resources/golden/surface"
-  private val cfgDir = "/root/reference/data/config"
+  private val cfgDir = ReferenceConfig.dir
+  private val mappingsCopy = "src/test/resources/config/mappings.json"
 
   private def bytes(p: String): Array[Byte] = Files.readAllBytes(Paths.get(p))
   private def str(p: String): String = new String(bytes(p), StandardCharsets.UTF_8)
@@ -61,6 +70,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("template CSV generation matches reference bytes for every shipped spec") {
+    ReferenceConfig.assumePresent()
     val specs = SpecStore.loadFileSpecs(s"$cfgDir/sources.json") ++
       SpecStore.loadFileSpecs(s"$cfgDir/destinations.json")
     val withCols = specs.values.filter(_.columns.nonEmpty)
@@ -73,6 +83,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("template writer creates directory and file like the reference") {
+    ReferenceConfig.assumePresent()
     val tmp = Files.createTempDirectory("tmpl").toString
     val spec = SpecStore.loadFileSpecs(s"$cfgDir/sources.json")("revolut_stocks")
     val out = Templates.createSpecDirectoryAndTemplate(spec, tmp)
@@ -86,6 +97,7 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("SpecJson round-trips every shipped config file byte-for-byte") {
+    ReferenceConfig.assumePresent()
     assert(SpecJson.dumpFileSpecs(SpecStore.loadFileSpecs(s"$cfgDir/sources.json"))
       === str(s"$cfgDir/sources.json"))
     assert(SpecJson.dumpFileSpecs(SpecStore.loadFileSpecs(s"$cfgDir/destinations.json"))
@@ -94,9 +106,24 @@ class SurfaceSpec extends AnyFunSuite {
       === str(s"$cfgDir/mappings.json"))
   }
 
+  test("repo mappings.json copy holds the gen_golden Revolut mappings") {
+    val copy = SpecStore.loadMappings(mappingsCopy)
+    for ((id, golden) <- Seq("revolut_stocks_to_ghostfolio" -> "stocks_dynamic",
+                             "revolut_crypto_to_ghostfolio" -> "crypto_dynamic"))
+      assert(copy(id) === SpecStore.parseMapping(
+        str(s"src/test/resources/golden/$golden.mapping.json")), id)
+    assert(SpecJson.dumpMappings(copy) === str(mappingsCopy))
+  }
+
+  test("repo mappings.json copy equals the reference's shipped file") {
+    val shipped = s"$cfgDir/mappings.json"
+    assume(Files.isRegularFile(Paths.get(shipped)), s"$shipped absent")
+    assert(bytes(mappingsCopy) sameElements bytes(shipped))
+  }
+
   test("SpecStore upsert matches reference save_mapping bytes (in-place + append)") {
     val work = Files.createTempFile("mappings", ".json")
-    Files.write(work, bytes(s"$cfgDir/mappings.json"))
+    Files.write(work, bytes(mappingsCopy))
     val existing = SpecStore.loadMappings(work.toString)("revolut_stocks_to_ghostfolio")
     SpecStore.upsertMapping(work.toString, existing.copy(
       description = "Convert Revolut stock trades to Ghostfolio format (v2 — edited)"))
@@ -113,7 +140,7 @@ class SurfaceSpec extends AnyFunSuite {
 
   test("SpecStore delete removes the key and reports absence") {
     val work = Files.createTempFile("mappings", ".json")
-    Files.write(work, bytes(s"$cfgDir/mappings.json"))
+    Files.write(work, bytes(mappingsCopy))
     assert(SpecStore.deleteMapping(work.toString, "revolut_crypto_to_ghostfolio"))
     assert(!SpecStore.deleteMapping(work.toString, "revolut_crypto_to_ghostfolio"))
     val left = SpecStore.loadMappings(work.toString)
