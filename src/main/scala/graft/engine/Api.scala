@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.spec.{ETLMapping, FileSpec}
 
 /** One preview row: 1-based CSV line number (header = 1, first data row = 2,
@@ -19,27 +20,51 @@ final case class Preview(rows: Seq[PreviewRow],
   * (SURVEY.md §2.A D1/D3). HTTP/session plumbing is out of engine scope;
   * these return the payloads the endpoints serialize.
   *
-  * Scale note: preview is `limit(n)` over the line-numbered scan — Spark
-  * stops reading after the first partition satisfies the limit; validation
-  * reuses the same compiled plan as conversion (one aggregate pass for the
-  * counts, a second only when there are errors to detail).
+  * Scale note: preview is one observed pass over the line-numbered scan.
+  * It flags each row with the mapping's compiled skip flag and errors,
+  * observes the gate's counts over every row, keeps the rows up to line
+  * `n + 1` above that observation and collects them: one Spark job for a
+  * one-partition file, no sort and no shuffle, because the scan numbers
+  * lines in partition order. A bounded `n` still scans the whole file for
+  * the counts. Conversion reuses the same compiled plan on its write pass.
   */
 object Api {
 
   /** D1 — first `n` raw rows with line numbers; with a mapping, also the
-    * full-file validation (dry-run) and its errors grouped by line. */
+    * full-file validation (dry-run) and its errors grouped by line.
+    *
+    * The counts are `Runner.validate`'s. The error detail comes from the
+    * collected rows, in `Runner.errorDetail`'s order and bound, unless a
+    * bounded `n` left some errors uncollected; then `errorDetail` runs.
+    * Where a blank line within the first `n + 1` lines leaves fewer than
+    * `n` rows collected, the rows are read again with `limit(n)`, which
+    * keeps partition order. */
   def preview(spark: SparkSession, path: String, spec: FileSpec,
               mapping: Option[ETLMapping], n: Int = 100): Preview = {
     val df = CsvSource.readWithLineNumbers(spark, path, spec)
-    val dataCols = df.columns.filterNot(_ == "__line_number")
-    val rows = df.orderBy("__line_number").limit(n).collect().map { r =>
-      PreviewRow(r.getAs[Long]("__line_number"),
-        dataCols.map(c => c -> Option(r.getAs[String](c)).getOrElse("")).toMap)
-    }.toSeq
+    val line = df.columns.indexOf(Runner.LINE)
+    val cells = df.columns.zipWithIndex.filterNot(_._1 == Runner.LINE)
+    def rowOf(r: Row) = PreviewRow(r.getLong(line),
+      cells.map { case (c, i) => c -> Option(r.getString(i)).getOrElse("") }.toMap)
+
+    val flagged = Runner.flagged(df, mapping)
+    val gate = Observation()
+    // the row bound sits above the observation: the counts cover every row
+    val collected = Runner.observe(flagged, gate)
+      .filter(col(Runner.LINE) <= n.toLong + 1).collect()
+    val c = Runner.Counts.of(gate, flagged)
+    val rows =
+      if (collected.length < math.min(n.toLong, c.total)) df.limit(n).collect().map(rowOf).toSeq
+      else collected.map(rowOf).toSeq
     mapping match {
       case None => Preview(rows, Map.empty, None)
       case Some(m) =>
-        val result = Runner.validate(df, m)
+        val errs = flagged.columns.length - 1 // the error array comes last
+        val shown = collected.toSeq.flatMap(r => r.getSeq[Row](errs).map(e =>
+          RowError(r.getLong(line), e.getString(0), e.getString(1), e.getString(2))))
+        val errors =
+          if (shown.size < c.errs) Runner.errorDetail(flagged) else Runner.firstErrors(shown)
+        val result = Runner.result(m, c, errors)
         Preview(rows, result.errors.groupBy(_.line_number), Some(result))
     }
   }

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.spec.ETLMapping
 import graft.compile.TransformCompiler
 
@@ -44,22 +45,39 @@ object Runner {
   private[engine] val ERRS = "__errors"
   private val ERR_TYPE = "array<struct<field:string,error_message:string,source_value:string>>"
 
+  /** The mapping compiled against `df`'s columns, and its row's skip flag
+    * and error array (empty on a skipped row). */
+  private def compiled(df: DataFrame, m: ETLMapping): (TransformCompiler.CompiledMapping, Column, Column) = {
+    val cm = TransformCompiler.compile(m, df.columns.toSet - LINE)
+    val errCol = when(cm.skip, array().cast(ERR_TYPE)).otherwise(cm.errors.cast(ERR_TYPE))
+    (cm, cm.skip.as(SKIP), errCol.as(ERRS))
+  }
+
   /** Annotated plan: all input rows, plus skip flag, destination values and
     * error array. Lazy — callers pick the action. */
   def plan(df: DataFrame, m: ETLMapping): DataFrame = {
-    val schema = df.columns.toSet - LINE
-    val cm = TransformCompiler.compile(m, schema)
+    val (cm, skip, errs) = compiled(df, m)
     val lineCol = if (df.columns.contains(LINE)) col(LINE) else lit(-1L).as(LINE)
-    val skip = cm.skip
     // field values & errors are only meaningful on non-skipped rows
-    val valueCols = cm.fields.map { case (d, c) => when(!skip, c).as(d) }
-    val errCol = when(skip, array().cast(ERR_TYPE)).otherwise(cm.errors.cast(ERR_TYPE)).as(ERRS)
-    df.select(lineCol.cast("long").as(LINE) +: skip.as(SKIP) +: errCol +: valueCols: _*)
+    val valueCols = cm.fields.map { case (d, c) => when(!cm.skip, c).as(d) }
+    df.select(lineCol.cast("long").as(LINE) +: skip +: errs +: valueCols: _*)
+  }
+
+  /** `df`'s own columns (raw cells and line number) followed by the
+    * mapping's skip flag and error array; without a mapping no row is
+    * skipped and none has errors. Lazy, like `plan`. */
+  private[engine] def flagged(df: DataFrame, m: Option[ETLMapping]): DataFrame = {
+    val (skip, errs) = m.fold((lit(false).as(SKIP), array().cast(ERR_TYPE).as(ERRS))) { m =>
+      val (_, s, e) = compiled(df, m)
+      (s, e)
+    }
+    df.select(col("*"), skip, errs)
   }
 
   /** The gate's counters over an annotated plan (row-level, before any
-    * aggregation): `validate` runs them as one aggregate query, `convert`
-    * and `Pipeline` observe them on the pass that writes. */
+    * aggregation): `validate` runs them as one aggregate query; `convert`,
+    * `Pipeline` and `Api.preview` observe them on the pass that writes or
+    * collects. */
   private val GateCounts: Seq[Column] = Seq(
     coalesce(sum(when(col(SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
     coalesce(sum(when(!col(SKIP) && size(col(ERRS)) === 0, 1L).otherwise(0L)), lit(0L)).as("clean"),
@@ -99,7 +117,7 @@ object Runner {
     * every row must not OOM the driver (errorCount still reports the true
     * total). Deterministic prefix: lowest line numbers first, not
     * first-collected partitions. */
-  private def errorDetail(planned: DataFrame): Seq[RowError] = {
+  private[engine] def errorDetail(planned: DataFrame): Seq[RowError] = {
     import planned.sparkSession.implicits._
     planned.filter(!col(SKIP) && size(col(ERRS)) > 0)
       .select(col(LINE), explode(col(ERRS)).as("e"))
@@ -110,12 +128,29 @@ object Runner {
       .as[RowError].collect().toSeq
   }
 
-  private def result(m: ETLMapping, c: Counts, errors: Seq[RowError],
-                     written: Boolean = false): TransformResult =
+  /** `errorDetail`'s prefix of errors already on the driver: the same
+    * order (line, field, message, strings compared as Spark sorts them, by
+    * UTF-8 bytes) and the same bound. */
+  private[engine] def firstErrors(errors: Seq[RowError]): Seq[RowError] =
+    errors.sorted(DetailOrder).take(MaxCollectedErrors)
+
+  private val DetailOrder: Ordering[RowError] = {
+    // as Spark sorts strings ascending: by UTF-8 bytes, nulls first
+    val str = Ordering.by((s: String) => Option(s).map(UTF8String.fromString))
+    Ordering.by((e: RowError) => (e.line_number, e.field, e.error_message))(
+      Ordering.Tuple3(Ordering.Long, str, str))
+  }
+
+  private[engine] def result(m: ETLMapping, c: Counts, errors: Seq[RowError],
+                             written: Boolean = false): TransformResult =
     if (m.fieldMappings.isEmpty) TransformResult(0L, c.total, 0L, Nil, written = false)
     else TransformResult(c.clean, c.skipped, c.errs, errors, written)
 
-  /** Dry-run (reference validate_file, dynamic.py:259-265). */
+  /** Dry-run (reference validate_file, dynamic.py:259-265): one aggregate
+    * query for the counts and, only when there are errors, one bounded
+    * `errorDetail` query. It never collects input rows, so driver memory
+    * stays bounded whatever the file's size; `Api.preview`, which collects
+    * rows anyway, gets the same result from its one observed pass. */
   def validate(df: DataFrame, m: ETLMapping): TransformResult = {
     val planned = plan(df, m)
     val c = Counts.of(planned)

@@ -1,9 +1,8 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
@@ -39,7 +38,7 @@ final class Dashboard(spark: SparkSession, configDir: String,
                       // deterministic under test (engine reads no clock)
                       clock: () => String = () => java.time.Instant.now().toString) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = LoopbackServer.create(port)
   server.createContext("/", (ex: HttpExchange) => handle(ex))
 
   def boundPort: Int = server.getAddress.getPort

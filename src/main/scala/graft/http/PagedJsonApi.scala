@@ -1,8 +1,7 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 import graft.spec.SpecJson
 
 /** Minimal paginated JSON data endpoint — the serving twin of the k31 REST
@@ -33,7 +32,7 @@ final class PagedJsonApi(initialRows: IndexedSeq[Map[String, Any]], pageSize: In
   private val served = new java.util.concurrent.atomic.AtomicLong(0)
   def pagesServed: Long = served.get()
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  private val server = LoopbackServer.create(port)
   server.createContext(path, (ex: HttpExchange) => handle(ex))
 
   def boundPort: Int = server.getAddress.getPort

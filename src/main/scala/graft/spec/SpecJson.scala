@@ -39,30 +39,37 @@ object SpecJson {
     case m: collection.Map[_, _] =>
       if (m.isEmpty) sb ++= "{}"
       else {
-        sb ++= "{\n"
-        val items = m.toSeq
-        items.zipWithIndex.foreach { case ((k, mv), i) =>
-          sb ++= pad(indent * (depth + 1))
+        sb += '{'
+        writeItems(sb, m.iterator, indent, depth) { case (k, mv) =>
           writeStr(sb, k.toString); sb ++= ": "
           writeVal(sb, mv, indent, depth + 1)
-          if (i < items.size - 1) sb ++= ","
-          sb ++= "\n"
         }
-        sb ++= pad(indent * depth); sb += '}'
+        sb += '}'
       }
     case xs: Seq[_] =>
       if (xs.isEmpty) sb ++= "[]"
       else {
-        sb ++= "[\n"
-        xs.zipWithIndex.foreach { case (x, i) =>
-          sb ++= pad(indent * (depth + 1))
-          writeVal(sb, x, indent, depth + 1)
-          if (i < xs.size - 1) sb ++= ","
-          sb ++= "\n"
-        }
-        sb ++= pad(indent * depth); sb += ']'
+        sb += '['
+        writeItems(sb, xs.iterator, indent, depth)(writeVal(sb, _, indent, depth + 1))
+        sb += ']'
       }
     case other => writeStr(sb, other.toString)
+  }
+
+  /** The indented body of a non-empty container, in one pass over its
+    * items (a `List`'s `size` is linear, so no per-item size check). */
+  private def writeItems[A](sb: StringBuilder, items: Iterator[A], indent: Int, depth: Int)
+                           (write: A => Unit): Unit = {
+    val inner = pad(indent * (depth + 1))
+    var first = true
+    items.foreach { x =>
+      sb ++= (if (first) "\n" else ",\n")
+      first = false
+      sb ++= inner
+      write(x)
+    }
+    sb += '\n'
+    sb ++= pad(indent * depth)
   }
 
   private def writeStr(sb: StringBuilder, s: String): Unit = {

@@ -2,10 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.GZIPOutputStream
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, try_element_at, udf}
 import org.scalatest.funsuite.AnyFunSuite
@@ -45,28 +42,7 @@ class CsvSourceHeaderSpec extends AnyFunSuite {
   private def read(path: String): DataFrame =
     CsvSource.readWithLineNumbers(spark, path, FileSpec("t", "t"))
 
-  /** Spark jobs started while `body` runs: a marked job runs after it, and
-    * every job the listener saw before the marked one is counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val marked = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.job.description") == "marker") marked.countDown()
-        else if (marked.getCount > 0) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(marked.await(60, TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsDuring(body: => Unit): Int = SparkJobs.during(spark)(body).jobs
 
   private val endings = Seq(
     "LF" -> "id,na\u00efve name\n1,a\n2,b\n",
