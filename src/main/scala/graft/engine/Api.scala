@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.spec.{ETLMapping, FileSpec}
 
-/** One preview row: 1-based CSV line number (header = 1, first data row = 2,
+/** One preview row: its record ordinal (header = 1, first data record = 2,
   * app.py:535) plus the raw cells in header order. */
 final case class PreviewRow(line: Long, cells: Map[String, String])
 
@@ -20,42 +20,36 @@ final case class Preview(rows: Seq[PreviewRow],
   * (SURVEY.md §2.A D1/D3). HTTP/session plumbing is out of engine scope;
   * these return the payloads the endpoints serialize.
   *
-  * Scale note: preview is one observed pass over the line-numbered scan.
-  * It flags each row with the mapping's compiled skip flag and errors,
-  * observes the gate's counts over every row, keeps the rows up to line
-  * `n + 1` above that observation and collects them: one Spark job for a
-  * one-partition file, no sort and no shuffle, because the scan numbers
-  * lines in partition order. A bounded `n` still scans the whole file for
-  * the counts. Conversion reuses the same compiled plan on its write pass.
+  * Scale note: preview is one observed pass over the record-numbered
+  * scan. It flags each row with the mapping's compiled skip flag and
+  * errors, observes the gate's counts over every row, keeps the records
+  * numbered up to `n + 1` above that observation and collects them: one
+  * Spark job for a one-partition file, no sort and no shuffle, because
+  * the scan numbers records in partition order. A bounded `n` still scans
+  * the whole file for the counts. Conversion reuses the same compiled plan
+  * on its write pass.
   */
 object Api {
 
-  /** D1 — first `n` raw rows with line numbers; with a mapping, also the
-    * full-file validation (dry-run) and its errors grouped by line.
+  /** D1 — first `n` raw rows with their record ordinals; with a mapping,
+    * also the full-file validation (dry-run) and its errors grouped by
+    * line. Ordinals have no gaps, so the rows numbered up to `n + 1` are
+    * the first `n`.
     *
     * The counts are `Runner.validate`'s. The error detail comes from the
     * collected rows, in `Runner.errorDetail`'s order and bound, unless a
-    * bounded `n` left some errors uncollected; then `errorDetail` runs.
-    * Where a blank line within the first `n + 1` lines leaves fewer than
-    * `n` rows collected, the rows are read again with `limit(n)`, which
-    * keeps partition order. */
+    * bounded `n` left some errors uncollected; then `errorDetail` runs. */
   def preview(spark: SparkSession, path: String, spec: FileSpec,
               mapping: Option[ETLMapping], n: Int = 100): Preview = {
     val df = CsvSource.readWithLineNumbers(spark, path, spec)
     val line = df.columns.indexOf(Runner.LINE)
-    val cells = df.columns.zipWithIndex.filterNot(_._1 == Runner.LINE)
-    def rowOf(r: Row) = PreviewRow(r.getLong(line),
-      cells.map { case (c, i) => c -> Option(r.getString(i)).getOrElse("") }.toMap)
-
     val flagged = Runner.flagged(df, mapping)
     val gate = Observation()
     // the row bound sits above the observation: the counts cover every row
     val collected = Runner.observe(flagged, gate)
       .filter(col(Runner.LINE) <= n.toLong + 1).collect()
     val c = Runner.Counts.of(gate, flagged)
-    val rows =
-      if (collected.length < math.min(n.toLong, c.total)) df.limit(n).collect().map(rowOf).toSeq
-      else collected.map(rowOf).toSeq
+    val rows = previewRows(df.columns, collected)
     mapping match {
       case None => Preview(rows, Map.empty, None)
       case Some(m) =>
@@ -67,6 +61,23 @@ object Api {
         val result = Runner.result(m, c, errors)
         Preview(rows, result.errors.groupBy(_.line_number), Some(result))
     }
+  }
+
+  /** The raw rows numbered `lines`, in file order: the row data of a
+    * file's errors. Only those rows reach the driver. */
+  def rowsAt(spark: SparkSession, path: String, spec: FileSpec,
+             lines: Set[Long]): Seq[PreviewRow] = {
+    val df = CsvSource.readWithLineNumbers(spark, path, spec)
+    previewRows(df.columns, df.filter(col(Runner.LINE).isin(lines.toSeq: _*)).collect())
+  }
+
+  /** Rows whose leading columns are the reader's `columns`, as preview
+    * rows; a missing cell reads "". */
+  private def previewRows(columns: Array[String], rows: Array[Row]): Seq[PreviewRow] = {
+    val line = columns.indexOf(Runner.LINE)
+    val cells = columns.indices.filter(_ != line)
+    rows.map(r => PreviewRow(r.getLong(line),
+      cells.map(i => columns(i) -> Option(r.getString(i)).getOrElse("")).toMap)).toSeq
   }
 
   /** D3 — validate-then-convert with the fail-on-error gate (app.py:625-677

@@ -85,6 +85,9 @@ object PyCsv {
       -1
     }
 
+    /** Whether the input stops inside a quoted field. */
+    def quoted: Boolean = state == InQuoted
+
     /** Ends the input: true if a record was still open (now in `take`). */
     def finish(): Boolean =
       if (state == StartField && fields.isEmpty) false
@@ -97,13 +100,52 @@ object PyCsv {
     }
   }
 
-  /** The fields of one line that holds no line break: the splitter of the
-    * per-line reader. An empty line has no fields. */
-  def parseLine(line: String, d: Char): Seq[String] = {
+  /** The records of a sequence of lines, as `spark.read.text` splits a
+    * file: each line lost its break, and each is read as ended by `\n`
+    * (universal line breaks make the three kinds equal). Blank lines are
+    * skipped. With `end` None more lines follow, so a record still open
+    * after the last line is left out. With `Some(lastBreak)` the input
+    * ends here: the open record is kept, and the last line is read with
+    * its break only if `lastBreak()`. The break shows only in a quoted
+    * field left open (`"a` + `\n` reads as `a\n`), so `lastBreak` is asked
+    * only then. */
+  def lineRecords(lines: Iterator[String], d: Char,
+                  end: Option[() => Boolean]): Iterator[IndexedSeq[String]] = {
     val m = new Machine(d)
-    m.feed(line, 0, line.length)
-    m.finish()
-    m.take()
+    def nextRecord(): IndexedSeq[String] = {
+      while (lines.hasNext) {
+        val line = lines.next()
+        m.feed(line, 0, line.length)
+        if ((lines.hasNext || end.forall(lastBreak => !m.quoted || lastBreak())) &&
+            m.feed("\n", 0, 1) >= 0) {
+          val rec = m.take()
+          if (rec.nonEmpty) return rec
+        }
+      }
+      if (end.isDefined && m.finish()) m.take() else null
+    }
+    Iterator.continually(nextRecord()).takeWhile(_ != null)
+  }
+
+  /** Whether a record is inside a quoted field at the end of `line`, a
+    * line without its break, read from a field start (`quoted` false) or
+    * from inside a quoted field (`quoted` true). These are the only two
+    * states a line can start in, so this is `Machine`'s state alone, with
+    * no cells kept. */
+  def quotedAfter(line: String, quoted: Boolean, d: Char): Boolean = {
+    var state = if (quoted) InQuoted else StartField
+    var i = 0
+    while (i < line.length) {
+      val c = line.charAt(i)
+      state = state match {
+        case StartField => if (c == '"') InQuoted else if (c == d) StartField else InField
+        case InField => if (c == d) StartField else InField
+        case InQuoted => if (c == '"') QuoteInQuoted else InQuoted
+        case _ => if (c == '"') InQuoted else if (c == d) StartField else InField
+      }
+      i += 1
+    }
+    state == InQuoted
   }
 
   /** The records of a text, in order; blank lines are skipped. */

@@ -1013,11 +1013,11 @@ final class Dashboard(spark: SparkSession, configDir: String,
             errors += r.errorCount
             // reference app.py:209 carries the raw row dict per error;
             // RowError stores only the line number, so errored files get
-            // one re-read to rebuild line → cells (header order)
+            // one read of just the errored rows to rebuild line → cells
             val rowsByLine: Map[Long, Map[String, String]] =
               if (r.errors.isEmpty) Map.empty
-              else Api.preview(spark, f.toString, source, None, n = Int.MaxValue)
-                .rows.map(pr => pr.line -> pr.cells).toMap
+              else Api.rowsAt(spark, f.toString, source, r.errors.map(_.line_number).toSet)
+                .map(pr => pr.line -> pr.cells).toMap
             r.errors.foreach { e =>
               val cells = rowsByLine.getOrElse(e.line_number, Map.empty)
               allErrors += VectorMap[String, Any](

@@ -3,15 +3,17 @@ package graft
 import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.engine.PyCsv
+import CsvDialectPropertySpec.parseLine
 
 /** Property pin for the csv-module dialect (engine.PyCsv): renderRecords is
-  * the reference writer twin (QUOTE_MINIMAL, doubled quotes), parseLine and
-  * records the DictReader twins — parsing must invert rendering for ANY
-  * field content (parseLine: one line, so no line breaks; records: any
-  * text). The fuzz suite pins parity against the EXECUTED reference on
-  * sampled cases; these properties close the space in between with 500
-  * random rows or texts per run. The record-level cases are pinned to
-  * Python 3.11's csv.reader over a file opened in text mode. */
+  * the reference writer twin (QUOTE_MINIMAL, doubled quotes), records (and
+  * parseLine, its one-line form below) the DictReader twins — parsing must
+  * invert rendering for ANY field content (parseLine: one line, so no line
+  * breaks; records: any text). The fuzz suite pins parity against the
+  * EXECUTED reference on sampled cases; these properties close the space
+  * in between with 500 random rows or texts per run. The record-level
+  * cases are pinned to Python 3.11's csv.reader over a file opened in
+  * text mode. */
 class CsvDialectPropertySpec extends AnyFunSuite {
 
   // printable-ish field content, quote/comma/space-heavy on purpose
@@ -33,7 +35,7 @@ class CsvDialectPropertySpec extends AnyFunSuite {
   test("parseLine inverts renderRecords for any newline-free row") {
     check(Prop.forAll(rowGen) { row =>
       val rendered = PyCsv.renderRecords(Seq(row)).stripSuffix("\r\n")
-      val back = PyCsv.parseLine(rendered, ',')
+      val back = parseLine(rendered, ',')
       Prop(back == row) :| s"rendered=<$rendered> back=$back"
     })
   }
@@ -42,15 +44,15 @@ class CsvDialectPropertySpec extends AnyFunSuite {
     // cases cross-checked against csv.reader directly (see fuzz_golden's
     // provenance): quote special only at field start; text after a closing
     // quote is literal; doubled quote in unquoted field stays
-    assert(PyCsv.parseLine("""say "hi",x""", ',') == Seq("say \"hi\"", "x"))
-    assert(PyCsv.parseLine(""""a"b,c""", ',') == Seq("ab", "c"))
-    assert(PyCsv.parseLine("a\"\"b,\"say \"\"hi\"\"\",z", ',')
+    assert(parseLine("""say "hi",x""", ',') == Seq("say \"hi\"", "x"))
+    assert(parseLine(""""a"b,c""", ',') == Seq("ab", "c"))
+    assert(parseLine("a\"\"b,\"say \"\"hi\"\"\",z", ',')
       == Seq("a\"\"b", "say \"hi\"", "z"))
-    assert(PyCsv.parseLine("\"\"", ',') == Seq(""))
-    assert(PyCsv.parseLine("a,", ',') == Seq("a", ""))
-    assert(PyCsv.parseLine(",", ',') == Seq("", ""))
+    assert(parseLine("\"\"", ',') == Seq(""))
+    assert(parseLine("a,", ',') == Seq("a", ""))
+    assert(parseLine(",", ',') == Seq("", ""))
     // unterminated quote: field taken as-is to end of line (non-strict)
-    assert(PyCsv.parseLine("\"open,ended", ',') == Seq("open,ended"))
+    assert(parseLine("\"open,ended", ',') == Seq("open,ended"))
   }
 
   test("records invert renderRecords: line breaks, quotes, delimiters, lone empties") {
@@ -100,4 +102,11 @@ class CsvDialectPropertySpec extends AnyFunSuite {
       Seq(" a ", "x\"y", "p,q", "l\nm", "r\rs"))) ==
       "\"\"\r\n,\r\n a ,\"x\"\"y\",\"p,q\",\"l\nm\",\"r\rs\"\r\n")
   }
+}
+
+object CsvDialectPropertySpec {
+  /** The fields of one line that holds no line break: the one record
+    * `PyCsv.records` reads from it; an empty line has no fields. */
+  def parseLine(line: String, d: Char): Seq[String] =
+    PyCsv.records(line, d).nextOption().getOrElse(Seq.empty)
 }

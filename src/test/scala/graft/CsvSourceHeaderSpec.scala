@@ -6,7 +6,8 @@ import java.util.zip.GZIPOutputStream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit, try_element_at, udf}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{CsvSource, PyCsv}
+import graft.engine.CsvSource
+import graft.CsvDialectPropertySpec.parseLine
 import graft.spec.FileSpec
 
 /** `CsvSource.readWithLineNumbers` reads the header on the driver. Its
@@ -31,11 +32,11 @@ class CsvSourceHeaderSpec extends AnyFunSuite {
       .map { case (l, i) => (l, i + 1) }
     val df = spark.createDataFrame(lines).toDF("__line", "__line_number")
     val header = df.filter($"__line_number" === 1).head().getString(0)
-    val parse = udf((line: String) => PyCsv.parseLine(line, ','))
+    val parse = udf((line: String) => parseLine(line, ','))
     df.filter($"__line_number" > 1 && $"__line" =!= "")
       .withColumn("__fields", parse($"__line"))
       .select(col("__line_number") +:
-        PyCsv.parseLine(header, ',').zipWithIndex.map { case (n, i) =>
+        parseLine(header, ',').zipWithIndex.map { case (n, i) =>
           try_element_at(col("__fields"), lit(i + 1)).as(n) }: _*)
   }
 

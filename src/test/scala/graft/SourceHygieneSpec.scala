@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Write the character as the `\u0000` escape instead. Sessions come from
   * one factory, so their policy is set in one place. CSV text is read and
   * written by one codec, engine/PyCsv, so the dialect is kept in one
-  * place. */
+  * place, and numbered by one reader, CsvSource.readWithLineNumbers. */
 class SourceHygieneSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
@@ -43,5 +43,14 @@ class SourceHygieneSpec extends AnyFunSuite {
       p.startsWith(Paths.get("src/main")) && p != codec &&
         copies.exists(Files.readString(p, ISO_8859_1).contains))
     assert(offenders.isEmpty, s"CSV dialect code outside PyCsv in: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main has no second reader that numbers records itself") {
+    // a whole-file read or an RDD index is how a second numbering reader
+    // would come back; split so this file does not match
+    val calls = Seq("binaryFiles" + "(", "wholeTextFiles" + "(", ".zipWithIndex" + "()")
+    val offenders = sources.filter(p =>
+      p.startsWith(Paths.get("src/main")) && calls.exists(Files.readString(p, ISO_8859_1).contains))
+    assert(offenders.isEmpty, s"record-numbering reads outside CsvSource in: ${offenders.mkString(", ")}")
   }
 }

@@ -185,9 +185,9 @@ def gen_case(rng):
 
 
 # cells with embedded newlines: record ordinals diverge from physical file
-# lines, the multiline-reader path (readRecordsWithOrdinals). No SHORT rows
-# here — a whole-file CSV parser cannot represent DictReader's missing/empty
-# distinction, which the line-reader family (above) already covers.
+# lines, which the engine's one reader (CsvSource.readWithLineNumbers)
+# numbers as records. No SHORT rows here; the family above already covers
+# DictReader's missing/empty distinction.
 ML_EXTRA = ["li\nne", "a\n\nb", "end\n", "say \"hi\"\nbye", "x,y\nz"]
 
 
