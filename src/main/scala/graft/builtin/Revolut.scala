@@ -1,11 +1,10 @@
 package graft.builtin
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.engine.{CsvSink, CsvSource}
+import graft.engine.CsvSink
 import graft.engine.CsvSink.money8Udf
 import graft.engine.Runner.lenientFloat
-import graft.spec.FileSpec
 
 /** The reference's two hardcoded pipelines (Revolut stocks/crypto →
   * Ghostfolio) re-expressed as compiled Spark column plans — SURVEY.md §2.A
@@ -155,11 +154,8 @@ object Revolut {
   }
 
   /** Full stocks plan over a raw all-string CSV frame with the Revolut
-    * export header. Output: the 9 Ghostfolio columns as formatted strings,
-    * plus any `keep` columns carried through (e.g. file provenance for the
-    * glob-mode writer). */
-  def stocksPlan(raw0: DataFrame, accountName: String = "Revolut Stocks",
-                 keep: Seq[String] = Nil): DataFrame = {
+    * export header. Output: the 9 Ghostfolio columns as formatted strings. */
+  def stocksPlan(raw0: DataFrame, accountName: String = "Revolut Stocks"): DataFrame = {
     // S3 extractor strip + Currency default (extractors/revolut_stocks.py:20-27)
     val raw = withExpected(raw0, Seq(
       "Date", "Ticker", "Type", "Quantity", "Price per share", "Currency"))
@@ -173,7 +169,7 @@ object Revolut {
       .filter(!typeUpper.isin(StocksSkipTypes: _*) && f("Ticker") =!= "")
       .withColumn("__gftype", mapStocksType(typeUpper))
       .filter(col("__gftype").isNotNull)
-      .select(Seq(
+      .select(
         parseDateStocks(f("Date")).as("date"),
         mapStocksSymbol(f("Ticker"), col("__ccy")).as("symbol"),
         col("__gftype").as("type"),
@@ -182,7 +178,7 @@ object Revolut {
         money8Udf(lit(0.0)).as("fee"),
         col("__ccy").as("currency"),
         lit(accountName).as("account"),
-        lit("").as("dataSource")) ++ keep.map(col): _*)
+        lit("").as("dataSource"))
   }
 
   // ---- crypto pipeline (revolut_crypto.py) ------------------------------
@@ -204,10 +200,9 @@ object Revolut {
     coalesce(mapped, concat(symbolUpper, lit("-USD")))
   }
 
-  /** Full crypto plan over a raw all-string CSV frame (`keep` as in
+  /** Full crypto plan over a raw all-string CSV frame (output as in
     * stocksPlan). */
-  def cryptoPlan(raw0: DataFrame, accountName: String = "Revolut Crypto",
-                 keep: Seq[String] = Nil): DataFrame = {
+  def cryptoPlan(raw0: DataFrame, accountName: String = "Revolut Crypto"): DataFrame = {
     val raw = withExpected(raw0, Seq(
       "Symbol", "Type", "Quantity", "Price", "Value", "Fees", "Date"))
     def f(name: String) = pyStrip(coalesce(col(name), lit("")))
@@ -217,7 +212,7 @@ object Revolut {
       .withColumn("__gftype",
         when(typeUpper === "BUY", "BUY").when(typeUpper === "SELL", "SELL"))
       .filter(col("__gftype").isNotNull && f("Symbol") =!= "")
-      .select(Seq(
+      .select(
         parseDateCrypto(f("Date")).as("date"),
         mapCryptoSymbol(upper(f("Symbol"))).as("symbol"),
         col("__gftype").as("type"),
@@ -226,30 +221,7 @@ object Revolut {
         money8Udf(parseMoney(f("Fees"))).as("fee"),
         detectCurrency(f("Price"), f("Value")).as("currency"),
         lit(accountName).as("account"),
-        lit("YAHOO").as("dataSource")) ++ keep.map(col): _*)
-  }
-
-  /** S2 scale mode: ONE Spark job over a whole directory of export CSVs,
-    * per-file provenance via input_file_name, one output directory per
-    * source file (partitionBy) — replaces the driver-side per-file loop at
-    * scale (SURVEY.md §2.A S2/O2). `plan` is `stocksPlan` or `cryptoPlan`
-    * with its account name, given the columns to keep. Cells are written
-    * with the per-file writer's options, so they keep their whitespace.
-    * Returns rows written per source stem. */
-  def processGlob(spark: SparkSession, inGlob: String, outDir: String,
-                  plan: (DataFrame, Seq[String]) => DataFrame): Map[String, Long] = {
-    val raw = CsvSource.read(spark, inGlob, FileSpec("g", "g"))
-      .withColumn("src_file",
-        regexp_extract(input_file_name(), "([^/]+)\\.csv", 1))
-    val planned = plan(raw, Seq("src_file"))
-    planned.write
-      .partitionBy("src_file")
-      .options(CsvSink.csvOptions(GhostfolioFields.length, ","))
-      .option("header", value = true)
-      .mode("overwrite")
-      .csv(outDir)
-    planned.groupBy("src_file").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        lit("YAHOO").as("dataSource"))
   }
 
   /** K1 — write one Ghostfolio CSV per input (csv_loader.py:11-23) and

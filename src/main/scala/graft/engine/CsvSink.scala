@@ -1,25 +1,26 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
-import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.io.StringWriter
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import graft.spec.{ColumnSpec, FileSpec, SpecJson}
 
 /** CSV writer matching the reference's csv.DictWriter output
   * (csv_loader.py:11-23; dynamic.py:334-343):
   *   - header row in the given field order,
   *   - None → empty cell, Python str() for numerics/booleans,
-  *   - QUOTE_MINIMAL with doubled quotes (Spark: escape = quote char).
+  *   - every record, header included, rendered by `PyCsv.appendRecord`
+  *     (QUOTE_MINIMAL, doubled quotes, a lone empty field written `""`).
   *
   * `writeSingleFile` reproduces the reference's one-output-file-per-input
   * contract without funnelling the plan through one task: the rows are
-  * written as header-less part files in parallel, then joined in partition
-  * order behind one header and published with an atomic rename — or
-  * discarded, when the caller's gate refuses them.
+  * written as header-less part files in parallel by the spec sink
+  * (`graft.sources.SpecCsvTable`), then joined in partition order behind
+  * one header and published with an atomic rename — or discarded, when the
+  * caller's gate refuses them.
   */
 object CsvSink {
 
@@ -49,37 +50,7 @@ object CsvSink {
   private def prepared(df: DataFrame, fieldOrder: Seq[String]): DataFrame =
     df.select(fieldOrder.map(n => pyStringify(df, n).as(n)): _*)
 
-  /** Writer options, shared by the part files and the header. */
-  private[graft] def csvOptions(columns: Int, delimiter: String): Map[String, String] = {
-    // csv.writer quirk: an empty (or None) value in a ONE-column row is
-    // written as `""` — a quoted empty — so the record is distinguishable
-    // from a blank line; in multi-column rows empties stay unquoted.
-    // univocity substitutes empty/nullValue BEFORE quote processing, so the
-    // two-char `""` lands raw, exactly as Python emits it.
-    val lone = if (columns == 1) "\"\"" else ""
-    Map(
-      "sep" -> delimiter,
-      "escape" -> "\"",       // RFC-4180 doubled quotes, like csv module
-      "emptyValue" -> lone,   // like DictWriter
-      "nullValue" -> lone,
-      // Spark's CSV writer TRIMS cell whitespace by default; csv.writer
-      // preserves it verbatim (fuzz case: a value ending in '\n' lost its
-      // newline inside the quoted cell)
-      "ignoreLeadingWhiteSpace" -> "false",
-      "ignoreTrailingWhiteSpace" -> "false")
-  }
-
-  /** The header line, rendered by the generator Spark's CSV writer uses. */
-  private def header(schema: StructType, options: Map[String, String],
-                     timeZone: String): Array[Byte] = {
-    val out = new StringWriter()
-    val gen = new UnivocityGenerator(schema, out, new CSVOptions(options, false, timeZone))
-    gen.writeHeaders()
-    gen.close()
-    out.toString.getBytes(StandardCharsets.UTF_8)
-  }
-
-  /** Spark's part files in partition order (`part-<partition>-<job>-c<n>`). */
+  /** The sink's part files in partition order (`part-<partition>-<task>.csv`). */
   private def partsInOrder(dir: Path): Seq[Path] = {
     val listing = Files.list(dir)
     val parts = try listing.iterator.asScala.map(_.getFileName.toString)
@@ -106,21 +77,28 @@ object CsvSink {
   def writeSingleFile(df: DataFrame, fieldOrder: Seq[String], outFile: String,
                       delimiter: String = ",",
                       publish: Long => Boolean = _ => true): Option[Long] = {
-    val options = csvOptions(fieldOrder.length, delimiter)
+    // header-less, so the sink writes rows only; it requires a
+    // one-character delimiter, as csv.writer does
+    val parts = FileSpec("single_file", "single_file",
+      columns = fieldOrder.map(ColumnSpec(_)), delimiter = delimiter,
+      encoding = "utf-8", hasHeader = false)
     val rows = Observation()
     val out = prepared(df, fieldOrder).observe(rows, count(lit(1)).as("rows"))
     val staging = Paths.get(outFile + ".__staging__")
     val tmp = Paths.get(outFile + ".__tmp__")
     try {
-      out.write.options(options).mode("overwrite").csv(staging.toString)
+      out.write.format("graft.sources.SpecCsvTable")
+        .option("spec", SpecJson.dumps(SpecJson.fileSpecDict(parts)))
+        .mode("overwrite").save(staging.toString)
       val n = rows.get("rows").asInstanceOf[Long]
       Option.when(publish(n)) {
         val target = Paths.get(outFile).toAbsolutePath
         Files.createDirectories(target.getParent)
         val w = Files.newOutputStream(tmp)
         try {
-          w.write(header(out.schema, options,
-            df.sparkSession.conf.get("spark.sql.session.timeZone")))
+          val header = new java.lang.StringBuilder
+          PyCsv.appendRecord(header, fieldOrder, delimiter.head)
+          w.write(header.append('\n').toString.getBytes(StandardCharsets.UTF_8))
           partsInOrder(staging).foreach(Files.copy(_, w))
         } finally w.close()
         Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)

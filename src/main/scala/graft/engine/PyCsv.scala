@@ -7,9 +7,11 @@ import scala.collection.mutable.ArrayBuffer
 /** The one CSV dialect of the system: Python's csv module with its default
   * `excel` dialect, which the reference reads every file with
   * (`csv.DictReader`, dynamic.py:298-302) and writes every file with
-  * (`csv.DictWriter`, csv_loader.py:11-23). Spark's own CSV paths
-  * (`CsvSource.read`, `CsvSink`) are configured to agree with it; every
-  * hand-written reader and writer calls it.
+  * (`csv.DictWriter`, csv_loader.py:11-23). The paper's path renders every
+  * record through `appendRecord` (`CsvSink`, `RowEdit`, `Templates` and
+  * the `SpecCsvTable` sink), every hand-written reader calls it, and
+  * Spark's own CSV reader, in `CsvSource.read`, is configured to agree
+  * with it.
   *
   * Reading (non-strict, CPython `_csv.c`):
   *   - a quote opens a quoted field only at field start; inside it `""` is

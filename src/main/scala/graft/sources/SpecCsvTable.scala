@@ -254,7 +254,9 @@ private[sources] object SpecCsvScan {
   * truncate, which clears prior part files up front on the driver.
   * Input columns map to spec columns BY NAME — a spec column absent from
   * the input writes empty (the engine's dict[str,str] convention); any
-  * primitive input type renders through its string form. */
+  * primitive input type renders through its string form.
+  * `CsvSink.writeSingleFile` writes the convert's parts through it, with
+  * a header-less spec, and joins them behind one header. */
 private[sources] class SpecCsvWriteBuilder(spec: FileSpec, path: String,
     inSchema: StructType)
     extends org.apache.spark.sql.connector.write.WriteBuilder

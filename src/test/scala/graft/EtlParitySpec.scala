@@ -7,7 +7,7 @@ import graft.engine.{CsvSource, Runner}
 
 /** Behavior-parity suite: goldens under src/test/resources/golden were
   * produced by EXECUTING the reference engine (tools/gen_golden.py runs
-  * /root/reference's DynamicTransformer on the fixtures). Our engine must
+  * the reference checkout's DynamicTransformer on the fixtures). Our engine must
   * reproduce counts, per-line errors, the write gate, and the output CSV
   * byte-for-byte (modulo \r\n). */
 class EtlParitySpec extends AnyFunSuite {

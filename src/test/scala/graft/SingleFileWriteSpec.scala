@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.CacheEntries
 import org.scalatest.funsuite.AnyFunSuite
 import graft.builtin.Revolut
-import graft.engine.{Api, CsvSource, PyFormat, Pipeline, Runner}
+import graft.engine.{Api, CsvSink, CsvSource, PyFormat, Pipeline, Runner}
 import graft.spec.{FileSpec, SpecStore}
 
 /** The one gated single-file write: parts written in parallel, joined in
@@ -139,6 +139,56 @@ class SingleFileWriteSpec extends AnyFunSuite {
     assert(n == 0)
     assert(Files.readString(out) ==
       "date,symbol,type,quantity,unitPrice,fee,currency,account,dataSource\n")
+  }
+
+  // csv.writer's bytes for these cells (CPython 3.11); a record's first
+  // field starting with `#` is not quoted
+  test("writeSingleFile writes `#`-leading cells and header as csv.writer does") {
+    import spark.implicits._
+    val out = tmpFile("hash.csv")
+    val rows = Seq(("#h", "x"), ("#", "#"), ("# a, b", "c"), ("#q\"", "  pad  "), ("", "#"))
+    assert(CsvSink.writeSingleFile(rows.toDF("#id", "note"), Seq("#id", "note"),
+      out.toString).contains(5L))
+    val python = "#id,note\r\n#h,x\r\n#,#\r\n\"# a, b\",c\r\n\"#q\"\"\",  pad  \r\n,#\r\n"
+    assert(Files.readString(out) == python.replace("\r\n", "\n"))
+  }
+
+  /** `Api.convert` of a two-row file through `fields` (JSON field mappings);
+    * returns the written CSV. */
+  private def convertNames(fields: String): String = {
+    val in = tmpFile("names.csv")
+    Files.writeString(in, "name\nalpha\nbeta\n")
+    val m = SpecStore.parseMapping(s"""{"id": "c", "name": "c", "source_id": "s",
+      "destination_id": "d", "field_mappings": $fields, "filter_rules": []}""")
+    val out = tmpFile("out.csv")
+    assert(Api.convert(spark, in.toString, FileSpec("s", "s"), m, out.toString).written)
+    Files.readString(out)
+  }
+
+  private def constant(dest: String, value: String) =
+    s"""{"destination_field": "$dest", "source_field": null,
+      "transform_type": "constant", "transform_config": {"value": "$value"}}"""
+  private val direct =
+    """{"destination_field": "n", "source_field": "name",
+      "transform_type": "direct", "transform_config": {}}"""
+
+  test("Api.convert writes a `#tag` first field unquoted, as csv.writer does") {
+    // CPython: csv.writer(s).writerow(['#tag', 'alpha']) writes '#tag,alpha\r\n'
+    assert(convertNames(s"[${constant("tag", "#tag")}, $direct]") ==
+      "tag,n\n#tag,alpha\n#tag,beta\n")
+  }
+
+  test("writeGhostfolio and Api.convert keep cell whitespace as written") {
+    // csv.DictWriter writes a padded value as given
+    val raw = CsvSource.read(spark, s"$res/fixtures/stocks_hardcoded.csv", FileSpec("t", "t"))
+    val out = tmpFile("padded.csv")
+    val account = "Revolut Stocks "
+    assert(Revolut.writeGhostfolio(Revolut.stocksPlan(raw, account), out.toString) == 8)
+    val lines = Files.readString(out).split("\n").toSeq.tail
+    assert(lines.size == 8 && lines.forall(_.endsWith(s",$account,")), lines.head)
+
+    assert(convertNames(s"[$direct, ${constant("pad", "  pad  ")}]") ==
+      "n,pad\nalpha,  pad  \nbeta,  pad  \n")
   }
 
   test("Api.convert, Pipeline.run and writeGhostfolio leave nothing cached") {

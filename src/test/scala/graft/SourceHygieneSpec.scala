@@ -8,9 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source files stay plain text: a raw NUL byte makes grep and ripgrep
   * treat the whole file as binary and silently drop it from searches.
   * Write the character as the `\u0000` escape instead. Sessions come from
-  * one factory, so their policy is set in one place. CSV text is read and
-  * written by one codec, engine/PyCsv, so the dialect is kept in one
-  * place, and numbered by one reader, CsvSource.readWithLineNumbers. */
+  * one factory, so their policy is set in one place. The paper's path
+  * writes CSV with one renderer, `PyCsv.appendRecord`, and parses records
+  * by hand only in engine/PyCsv, so the dialect is kept in one place; its
+  * one call of Spark's own CSV reader is in CsvSource, and records are
+  * numbered by one reader, CsvSource.readWithLineNumbers. Tests reach the
+  * reference checkout only through ReferenceConfig. */
 class SourceHygieneSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
@@ -52,5 +55,30 @@ class SourceHygieneSpec extends AnyFunSuite {
     val offenders = sources.filter(p =>
       p.startsWith(Paths.get("src/main")) && calls.exists(Files.readString(p, ISO_8859_1).contains))
     assert(offenders.isEmpty, s"record-numbering reads outside CsvSource in: ${offenders.mkString(", ")}")
+  }
+
+  test("the paper's path writes CSV only through PyCsv") {
+    // Spark's univocity writer, and Spark's CSV reader or writer outside
+    // CsvSource on the convert, CLI and dashboard paths
+    val univocity = Seq("UnivocityGenerator", "catalyst.csv")
+    val main = sources.filter(_.startsWith(Paths.get("src/main")))
+    val generators = main.filter(p => univocity.exists(Files.readString(p, ISO_8859_1).contains))
+    assert(generators.isEmpty, s"Spark's CSV generator in: ${generators.mkString(", ")}")
+    val paths = Seq("engine", "builtin", "http", "cli").map(d => Paths.get(s"src/main/scala/graft/$d"))
+    val reader = Paths.get("src/main/scala/graft/engine/CsvSource.scala")
+    assert(main.contains(reader))
+    val offenders = main.filter(p => paths.exists(p.startsWith) && p != reader &&
+      Files.readString(p, ISO_8859_1).contains(".csv("))
+    assert(offenders.isEmpty, s"Spark CSV calls outside CsvSource in: ${offenders.mkString(", ")}")
+  }
+
+  test("src/test reaches the reference checkout only through ReferenceConfig") {
+    val config = Paths.get("src/test/scala/graft/ReferenceConfig.scala")
+    val checkout = Paths.get(ReferenceConfig.dir).getParent.getParent.toString
+    val walk = Files.walk(Paths.get("src/test"))
+    val files = try walk.iterator.asScala.filter(Files.isRegularFile(_)).toList finally walk.close()
+    assert(files.contains(config))
+    val offenders = files.filter(p => p != config && Files.readString(p, ISO_8859_1).contains(checkout))
+    assert(offenders.isEmpty, s"$checkout outside ReferenceConfig in: ${offenders.mkString(", ")}")
   }
 }
