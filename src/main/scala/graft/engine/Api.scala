@@ -22,12 +22,13 @@ final case class Preview(rows: Seq[PreviewRow],
   *
   * Scale note: preview is one observed pass over the record-numbered
   * scan. It flags each row with the mapping's compiled skip flag and
-  * errors, observes the gate's counts over every row, keeps the records
-  * numbered up to `n + 1` above that observation and collects them: one
-  * Spark job for a one-partition file, no sort and no shuffle, because
-  * the scan numbers records in partition order. A bounded `n` still scans
-  * the whole file for the counts. Conversion reuses the same compiled plan
-  * on its write pass.
+  * errors, observes the gate's counts and bounded error detail over every
+  * row, keeps the records numbered up to `n + 1` above that observation
+  * and collects them: one Spark job for a one-partition file, whatever
+  * `n` is and wherever the errors are, with no sort and no shuffle,
+  * because the scan numbers records in partition order. A bounded `n`
+  * still scans the whole file for the counts. Conversion observes the
+  * same counters and detail on its write pass, so it is one job too.
   */
 object Api {
 
@@ -36,13 +37,12 @@ object Api {
     * line. Ordinals have no gaps, so the rows numbered up to `n + 1` are
     * the first `n`.
     *
-    * The counts are `Runner.validate`'s. The error detail comes from the
-    * collected rows, in `Runner.errorDetail`'s order and bound, unless a
-    * bounded `n` left some errors uncollected; then `errorDetail` runs. */
+    * The counts and the bounded error detail are `Runner.validate`'s,
+    * observed on the same pass over every row, so they cover the lines a
+    * bounded `n` stops short of without a second query. */
   def preview(spark: SparkSession, path: String, spec: FileSpec,
               mapping: Option[ETLMapping], n: Int = 100): Preview = {
     val df = CsvSource.readWithLineNumbers(spark, path, spec)
-    val line = df.columns.indexOf(Runner.LINE)
     val flagged = Runner.flagged(df, mapping)
     val gate = Observation()
     // the row bound sits above the observation: the counts cover every row
@@ -53,12 +53,7 @@ object Api {
     mapping match {
       case None => Preview(rows, Map.empty, None)
       case Some(m) =>
-        val errs = flagged.columns.length - 1 // the error array comes last
-        val shown = collected.toSeq.flatMap(r => r.getSeq[Row](errs).map(e =>
-          RowError(r.getLong(line), e.getString(0), e.getString(1), e.getString(2))))
-        val errors =
-          if (shown.size < c.errs) Runner.errorDetail(flagged) else Runner.firstErrors(shown)
-        val result = Runner.result(m, c, errors)
+        val result = Runner.result(m, c)
         Preview(rows, result.errors.groupBy(_.line_number), Some(result))
     }
   }

@@ -1,7 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.unsafe.types.UTF8String
 import graft.spec.ETLMapping
 import graft.compile.TransformCompiler
@@ -75,16 +76,27 @@ object Runner {
   }
 
   /** The gate's counters over an annotated plan (row-level, before any
-    * aggregation): `validate` runs them as one aggregate query; `convert`,
-    * `Pipeline` and `Api.preview` observe them on the pass that writes or
-    * collects. */
+    * aggregation), and the first errored rows: `validate` runs them as one
+    * aggregate query; `convert`, `Pipeline` and `Api.preview` observe them
+    * on the pass that writes or collects, so the error detail costs no
+    * second query. `detail` holds the `MaxCollectedErrors` lowest errored
+    * rows by (line, smallest error, errors): each errored row holds at
+    * least one error, so they hold the first `MaxCollectedErrors` errors,
+    * also where lines tie (a frame without line numbers numbers every row
+    * -1). Each task keeps at most that many rows, as a sort-and-limit
+    * would, so driver memory stays bounded whatever the input. */
   private val GateCounts: Seq[Column] = Seq(
     coalesce(sum(when(col(SKIP), 1L).otherwise(0L)), lit(0L)).as("skipped"),
     coalesce(sum(when(!col(SKIP) && size(col(ERRS)) === 0, 1L).otherwise(0L)), lit(0L)).as("clean"),
     coalesce(sum(when(!col(SKIP), size(col(ERRS)).cast("long")).otherwise(0L)), lit(0L)).as("errs"),
-    count(lit(1)).as("total"))
+    count(lit(1)).as("total"),
+    Bridge.collectSmallest(when(!col(SKIP) && size(col(ERRS)) > 0,
+      struct(col(LINE), array_min(col(ERRS)), col(ERRS))), MaxCollectedErrors).as("detail"))
 
-  private[engine] final case class Counts(skipped: Long, clean: Long, errs: Long, total: Long) {
+  /** The gate's counts and the error detail: the first `MaxCollectedErrors`
+    * errors by (line, field, message), however many there are. */
+  private[engine] final case class Counts(skipped: Long, clean: Long, errs: Long, total: Long,
+                                          errors: Seq[RowError]) {
     /** rows the filter rules keep */
     def survivors: Long = total - skipped
   }
@@ -92,7 +104,11 @@ object Runner {
   private[engine] object Counts {
     def of(values: Map[String, Any]): Counts = {
       def n(k: String) = values(k).asInstanceOf[Long]
-      Counts(n("skipped"), n("clean"), n("errs"), n("total"))
+      val errors = values("detail").asInstanceOf[collection.Seq[Row]].flatMap { r =>
+        r.getSeq[Row](2).map(e => RowError(r.getLong(0), e.getString(0), e.getString(1), e.getString(2)))
+      }
+      Counts(n("skipped"), n("clean"), n("errs"), n("total"),
+        errors.sorted(DetailOrder).take(MaxCollectedErrors).toSeq)
     }
     /** One aggregate query over an annotated plan. */
     def of(planned: DataFrame): Counts = {
@@ -113,49 +129,25 @@ object Runner {
   private[engine] def observe(planned: DataFrame, gate: Observation): DataFrame =
     planned.observe(gate, GateCounts.head, GateCounts.tail: _*)
 
-  /** Per-row error detail, BOUNDED: adversarial input with an error on
-    * every row must not OOM the driver (errorCount still reports the true
-    * total). Deterministic prefix: lowest line numbers first, not
-    * first-collected partitions. */
-  private[engine] def errorDetail(planned: DataFrame): Seq[RowError] = {
-    import planned.sparkSession.implicits._
-    planned.filter(!col(SKIP) && size(col(ERRS)) > 0)
-      .select(col(LINE), explode(col(ERRS)).as("e"))
-      .select(col(LINE).as("line_number"), col("e.field"),
-              col("e.error_message"), col("e.source_value"))
-      .orderBy(col("line_number"), col("field"), col("error_message"))
-      .limit(MaxCollectedErrors)
-      .as[RowError].collect().toSeq
-  }
-
-  /** `errorDetail`'s prefix of errors already on the driver: the same
-    * order (line, field, message, strings compared as Spark sorts them, by
-    * UTF-8 bytes) and the same bound. */
-  private[engine] def firstErrors(errors: Seq[RowError]): Seq[RowError] =
-    errors.sorted(DetailOrder).take(MaxCollectedErrors)
-
+  /** The error detail's order: line, field, message, strings compared as
+    * Spark sorts them ascending, by UTF-8 bytes with nulls first. */
   private val DetailOrder: Ordering[RowError] = {
-    // as Spark sorts strings ascending: by UTF-8 bytes, nulls first
     val str = Ordering.by((s: String) => Option(s).map(UTF8String.fromString))
     Ordering.by((e: RowError) => (e.line_number, e.field, e.error_message))(
       Ordering.Tuple3(Ordering.Long, str, str))
   }
 
-  private[engine] def result(m: ETLMapping, c: Counts, errors: Seq[RowError],
-                             written: Boolean = false): TransformResult =
+  private[engine] def result(m: ETLMapping, c: Counts, written: Boolean = false): TransformResult =
     if (m.fieldMappings.isEmpty) TransformResult(0L, c.total, 0L, Nil, written = false)
-    else TransformResult(c.clean, c.skipped, c.errs, errors, written)
+    else TransformResult(c.clean, c.skipped, c.errs, c.errors, written)
 
   /** Dry-run (reference validate_file, dynamic.py:259-265): one aggregate
-    * query for the counts and, only when there are errors, one bounded
-    * `errorDetail` query. It never collects input rows, so driver memory
-    * stays bounded whatever the file's size; `Api.preview`, which collects
-    * rows anyway, gets the same result from its one observed pass. */
-  def validate(df: DataFrame, m: ETLMapping): TransformResult = {
-    val planned = plan(df, m)
-    val c = Counts.of(planned)
-    result(m, c, if (c.errs > 0) errorDetail(planned) else Nil)
-  }
+    * query for the counts and the bounded error detail, errors or none. It
+    * never collects input rows, so driver memory stays bounded whatever
+    * the file's size; `Api.preview`, which collects rows anyway, gets the
+    * same result from its one observed pass. */
+  def validate(df: DataFrame, m: ETLMapping): TransformResult =
+    result(m, Counts.of(plan(df, m)))
 
   // --- t12: aggregation transforms in the mapping DSL -----------------------
   // Reference ROADMAP.md:51 plans `sum/count/avg` as a transform type but
@@ -263,8 +255,9 @@ object Runner {
     * One pass: the gate's counters are observed on the annotated plan while
     * the output is written in parallel to staging; the file is published
     * only if the gate then passes (for aggregate mappings the gate stays
-    * row-level, observed below the grouping). Per-row error detail takes a
-    * second pass, only when there are errors.
+    * row-level, observed below the grouping). The bounded error detail is
+    * observed on the same pass and adds no query: a convert of a row-level
+    * mapping is one Spark job, gated or not.
     */
   def convert(df: DataFrame, m: ETLMapping, outFile: String,
               failOnError: Boolean = true): TransformResult =
@@ -277,6 +270,6 @@ object Runner {
       lazy val c = Counts.of(gate, planned)
       val written = CsvSink.writeSingleFile(out, out.columns.toSeq, outFile,
         publish = _ => c.survivors > 0 && (c.errs == 0 || !failOnError)).isDefined
-      result(m, c, if (c.errs > 0) errorDetail(planned) else Nil, written)
+      result(m, c, written)
     }
 }

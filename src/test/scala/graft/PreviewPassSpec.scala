@@ -3,13 +3,13 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Api, CsvSource, PreviewRow, Runner}
+import graft.engine.{Api, CsvSource, Preview, PreviewRow, Runner}
 import graft.spec.{ETLMapping, FieldMapping, FileSpec, FilterRule}
 
 /** `Api.preview` runs one observed pass: its rows equal a read sorted by
   * line number, its counts and errors equal `Runner.validate`'s whatever
-  * `n` is, and a whole-file preview of a one-partition file is one Spark
-  * job with no shuffle. */
+  * `n` is, and a preview of a one-partition file is one Spark job with no
+  * shuffle, even where its errors lie past the rows it returns. */
 class PreviewPassSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val spec = FileSpec("s", "s")
@@ -76,7 +76,7 @@ class PreviewPassSpec extends AnyFunSuite {
     assert(want.errorCount == 5)
     assert(p.result.contains(want))
     assert(p.errorsByLine.keySet == Set(6L, 30L, 41L, 55L))
-    // two errors on one line keep errorDetail's order: by field
+    // two errors on one line come in the detail's order: by field
     assert(p.errorsByLine(41L).map(_.field) == Seq("date", "status"))
   }
 
@@ -97,6 +97,25 @@ class PreviewPassSpec extends AnyFunSuite {
     assert(old.jobs > 1 && old.shuffleBytes > 0, "the listener sees the sorted read's shuffle")
     val ran = SparkJobs.during(spark)(Api.preview(spark, path, spec, Some(mapping), n = Int.MaxValue))
     assert(ran == SparkJobs.Ran(jobs = 1, shuffleBytes = 0))
+  }
+
+  test("a preview with n = 10 and errors past line 11 is one job") {
+    val path = file(60, badDates = Set(6L, 30L, 41L), badStatus = Set(41L, 55L))
+    var p = Option.empty[Preview]
+    val ran = SparkJobs.during(spark) {
+      p = Some(Api.preview(spark, path, spec, Some(mapping), n = 10))
+    }
+    assert(ran.jobs == 1)
+    assert(p.get.errorsByLine.keySet == Set(6L, 30L, 41L, 55L))
+  }
+
+  test("Runner.validate runs as many jobs with errors as without") {
+    val clean = file(60)
+    val errored = file(60, badDates = Set(6L, 30L, 41L), badStatus = Set(41L, 55L))
+    assert(validate(clean).errorCount == 0 && validate(errored).errorCount == 5)
+    val without = SparkJobs.during(spark)(validate(clean))
+    val withErrors = SparkJobs.during(spark)(validate(errored))
+    assert(withErrors.jobs == without.jobs)
   }
 
   test("the process route's re-read (no mapping, every row) is one job, rows unchanged") {

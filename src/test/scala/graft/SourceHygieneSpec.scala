@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * writes CSV with one renderer, `PyCsv.appendRecord`, and parses records
   * by hand only in engine/PyCsv, so the dialect is kept in one place; its
   * one call of Spark's own CSV reader is in CsvSource, and records are
-  * numbered by one reader, CsvSource.readWithLineNumbers. Tests reach the
-  * reference checkout only through ReferenceConfig. */
+  * numbered by one reader, CsvSource.readWithLineNumbers. Spark's internal
+  * Column API is reached only through the graftbridge package. Tests reach
+  * the reference checkout only through ReferenceConfig. */
 class SourceHygieneSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
@@ -70,6 +71,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     val offenders = main.filter(p => paths.exists(p.startsWith) && p != reader &&
       Files.readString(p, ISO_8859_1).contains(".csv("))
     assert(offenders.isEmpty, s"Spark CSV calls outside CsvSource in: ${offenders.mkString(", ")}")
+  }
+
+  test("only the graftbridge package reaches Spark's internal Column API") {
+    // Column.internalFn names functions Spark does not publish, and the
+    // classic package holds the Column <-> Expression converters; both can
+    // change between Spark releases, so one bridge holds every use
+    val bridge = Paths.get("src/main/scala/org/apache/spark/sql/graftbridge")
+    val internals = Seq("internalFn", "org.apache.spark.sql.classic")
+    val main = sources.filter(_.startsWith(Paths.get("src/main")))
+    assert(main.exists(_.startsWith(bridge)))
+    val offenders = main.filter(p => !p.startsWith(bridge) &&
+      internals.exists(Files.readString(p, ISO_8859_1).contains))
+    assert(offenders.isEmpty, s"Spark internals outside graftbridge in: ${offenders.mkString(", ")}")
   }
 
   test("src/test reaches the reference checkout only through ReferenceConfig") {
