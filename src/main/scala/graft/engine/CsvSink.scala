@@ -20,7 +20,8 @@ import graft.spec.{ColumnSpec, FileSpec, SpecJson}
   * written as header-less part files in parallel by the spec sink
   * (`graft.sources.SpecCsvTable`), then joined in partition order behind
   * one header and published with an atomic rename — or discarded, when the
-  * caller's gate refuses them.
+  * caller's gate refuses them. The sink and this join both handle the files
+  * through `java.nio.file`, so staging holds only the parts.
   */
 object CsvSink {
 

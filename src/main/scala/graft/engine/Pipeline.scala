@@ -30,20 +30,17 @@ final case class PipelineResult(
   * floats via str(float)) so the chain is bit-identical to running each
   * mapping separately through Runner.convert and re-reading the
   * intermediate CSV — pinned both ways by PipelineSpec tests and the c17
-  * oracle entry. Nothing materializes between steps UNLESS a step carries
-  * `fail_on_error`: that forces the reference's K3 two-phase at the stage
-  * boundary (persist + count errors before any downstream work), and a
-  * tripped gate aborts the chain with no output written — the reference's
-  * quarantine behavior (dynamic.py:334-343) lifted to chains.
-  *
-  * Ungated stage counters ride the plan as `Observation`s, filled in by
-  * whichever action first runs that stage — the final write, or a later
-  * gate's count — zero extra passes. The final frame is written the way
-  * Runner.convert writes: parallel parts, published only if it has rows.
-  * Scale shape: an all-ungated chain is a single filter+project pipeline
+  * oracle entry. Nothing materializes between steps: every stage, gated or
+  * not, observes its counters on the chain's one write, the way
+  * Runner.convert gates a single mapping. The file is published only if it
+  * has rows and no `fail_on_error` stage saw an error or kept no row; a
+  * tripped gate writes nothing — the reference's K3 quarantine
+  * (dynamic.py:334-343) lifted to chains — and the stages after it report
+  * `ran = false`, as a sequential runner would never have started them.
+  * Their rows were still computed inside the discarded staging write.
+  * Scale shape: a chain is one Spark job, a single filter+project pipeline
   * (one stage, no shuffle; aggregate steps add exactly their groupBy
-  * exchange); each fail_on_error gate adds one materialization boundary,
-  * which is the cost the K3 semantics inherently require.
+  * exchange), and nothing is persisted.
   *
   * Stage-2+ error DETAIL carries line_number -1 (the intermediate "file"
   * never exists, so there is no file line to report); counters are exact.
@@ -82,45 +79,25 @@ object Pipeline {
         s"pipeline step '${m.id}': empty field_mappings cannot feed a chain")
     }
 
-    // chain state
+    // every stage's gate counters ride the one write
     var cur = df
-    var abort: Option[Int] = None
-    val persisted = List.newBuilder[DataFrame]
-    // stage index -> its counters, exact (gated) or observed (ungated);
-    // stages after a tripped gate are never built and have none
-    val counts = scala.collection.mutable.Map[Int, () => Runner.Counts]()
-
-    steps.zipWithIndex.foreach { case ((m, foe), i) =>
-      if (abort.isEmpty) {
-        if (foe) {
-          // K3 two-phase at this boundary: materialize, gate, then continue
-          // from the persisted frame (downstream work starts only if clean)
-          val planned = Runner.plan(cur, m).persist()
-          persisted += planned
-          val c = Runner.Counts.of(planned)
-          counts(i) = () => c
-          // reference write gate: any surviving row AND no errors (K3)
-          if (c.errs > 0 || c.survivors == 0) abort = Some(i)
-          else cur = stringified(Runner.output(planned, m))
-        } else {
-          val planned = Runner.plan(cur, m)
-          val gate = Observation()
-          counts(i) = () => Runner.Counts.of(gate, planned)
-          cur = stringified(Runner.output(Runner.observe(planned, gate), m))
-        }
-      }
+    val gates = steps.map { case (m, _) =>
+      val planned = Runner.plan(cur, m)
+      val gate = Observation()
+      cur = stringified(Runner.output(Runner.observe(planned, gate), m))
+      (gate, planned)
     }
+    // read once the write has run, in stage order: a stage after the first
+    // tripped gate is never counted (reference write gate, K3)
+    lazy val counts = LazyList.from(gates).map { case (g, p) => Runner.Counts.of(g, p) }
+    lazy val abort = steps.indices.find(i =>
+      steps(i)._2 && (counts(i).errs > 0 || counts(i).survivors == 0))
 
-    val written = try {
-      abort.isEmpty &&
-        CsvSink.writeSingleFile(cur, cur.columns.toSeq, outFile, publish = _ > 0).isDefined
-    } finally persisted.result().foreach(_.unpersist())
-
+    val written = CsvSink.writeSingleFile(cur, cur.columns.toSeq, outFile,
+      publish = n => abort.isEmpty && n > 0).isDefined
     val stages = steps.zipWithIndex.map { case ((m, _), i) =>
-      counts.get(i).map(_()) match {
-        case Some(c) => StageResult(m.id, ran = true, c.clean, c.skipped, c.errs)
-        case None    => StageResult(m.id, ran = false, 0L, 0L, 0L)
-      }
+      if (abort.exists(_ < i)) StageResult(m.id, ran = false, 0L, 0L, 0L)
+      else { val c = counts(i); StageResult(m.id, ran = true, c.clean, c.skipped, c.errs) }
     }
     PipelineResult(stages, written, abort)
   }

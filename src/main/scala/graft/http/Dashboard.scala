@@ -99,6 +99,15 @@ final class Dashboard(spark: SparkSession, configDir: String,
       m.filter { case (k, _) => Accounts.canView(acls, teams, k, user) }
     }
 
+  /** The run history `user` may see, for /api/runs and the /runs page: in
+    * auth mode a run is visible when its mapping is, team shares expanded
+    * (anonymous viewers see only public/legacy mappings' runs). */
+  private def visibleRuns(user: Option[String]): Map[String, RunRecord] = {
+    val runs = SpecStore.loadRuns(runsPath)
+    val visible = visibleKeys(runs.values.map(r => r.mappingId -> ()).toMap, user).keySet
+    runs.filter { case (_, r) => visible.contains(r.mappingId) }
+  }
+
   /** Permission gate for the whole surface in auth mode; None = allowed.
     * The HTML pages and file routes enforce the SAME model as /api
     * (round-13 advice: the form POSTs and upload/download/delete were side
@@ -388,30 +397,9 @@ final class Dashboard(spark: SparkSession, configDir: String,
       // D5 run history: the durable twin of the reference's session-held
       // conversion counters (app.py:215-224)
       case "api" :: "runs" :: Nil if !post =>
-        // auth mode: a run is visible when its mapping is (team-expanded —
-        // visibleKeys keyed by the run's mappingId; the matrix spec caught
-        // the team-blind overload lingering here after teams shipped)
-        val runs0 = SpecStore.loadRuns(runsPath)
-        val runs =
-          if (!authOn) runs0
-          else {
-            val visible = visibleKeys(
-              runs0.values.map(r => r.mappingId -> ()).toMap, user).keySet
-            runs0.filter { case (_, r) => visible.contains(r.mappingId) }
-          }
-        respond(ex, 200, runs.map { case (k, v) => k -> SpecJson.runRecordDict(v) })
+        respond(ex, 200, visibleRuns(user).map { case (k, v) => k -> SpecJson.runRecordDict(v) })
       case "runs" :: Nil if !post =>
-        // same visibility contract as /api/runs (anonymous page viewers
-        // see only public/legacy mappings' runs)
-        val prs0 = SpecStore.loadRuns(runsPath)
-        val prs =
-          if (!authOn) prs0
-          else {
-            val visible = visibleKeys(
-              prs0.values.map(r => r.mappingId -> ()).toMap, user).keySet
-            prs0.filter { case (_, r) => visible.contains(r.mappingId) }
-          }
-        html(ex, Pages.runList(prs,
+        html(ex, Pages.runList(visibleRuns(user),
           visibleKeys(SpecStore.loadMappings(mappingsPath), user)), user = user)
       // ---- server-rendered pages (reference app.py:53-101, :237-448,
       // :492-513; original markup in Pages.scala, state from SpecStore) ----

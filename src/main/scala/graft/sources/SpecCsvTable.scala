@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.util
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -255,12 +256,18 @@ private[sources] object SpecCsvScan {
   * Input columns map to spec columns BY NAME — a spec column absent from
   * the input writes empty (the engine's dict[str,str] convention); any
   * primitive input type renders through its string form.
+  * Files are created, moved and swept with `java.nio.file`, the API
+  * `CsvSink.writeSingleFile` joins them with, so the directory holds only
+  * the parts (no `.crc` side files) and no write forks a process; `path`
+  * is a local directory, and one with a URI scheme is refused.
   * `CsvSink.writeSingleFile` writes the convert's parts through it, with
   * a header-less spec, and joins them behind one header. */
 private[sources] class SpecCsvWriteBuilder(spec: FileSpec, path: String,
     inSchema: StructType)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
+  require(!path.matches("[A-Za-z][A-Za-z0-9+.-]*:.*"),
+    s"SpecCsvTable writes to a local path; got '$path'")
   private var doTruncate = false
   override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
     doTruncate = true; this
@@ -268,69 +275,56 @@ private[sources] class SpecCsvWriteBuilder(spec: FileSpec, path: String,
   override def build(): org.apache.spark.sql.connector.write.Write =
     new org.apache.spark.sql.connector.write.Write {
       override def toBatch: org.apache.spark.sql.connector.write.BatchWrite = {
-        if (doTruncate) {
-          val p = new Path(path)
-          val fs = p.getFileSystem(
-            SparkSession.active.sparkContext.hadoopConfiguration)
-          if (fs.exists(p))
-            fs.listStatus(p).filter(_.getPath.getName.endsWith(".csv"))
-              .foreach(st => fs.delete(st.getPath, false))
-        }
-        val entries = SparkSession.active.sparkContext.hadoopConfiguration
-          .iterator().asScala.map(e => e.getKey -> e.getValue).toArray
-        new SpecCsvBatchWrite(spec, path, inSchema, entries)
+        if (doTruncate) SpecCsvBatchWrite.sweep(path, _.endsWith(".csv"))
+        Files.createDirectories(Paths.get(path))
+        new SpecCsvBatchWrite(spec, path, inSchema)
       }
     }
 }
 
+private[sources] object SpecCsvBatchWrite {
+  /** Deletes the files directly in `dir` whose names `doomed` picks. */
+  def sweep(dir: String, doomed: String => Boolean): Unit =
+    if (Files.isDirectory(Paths.get(dir))) {
+      val listing = Files.list(Paths.get(dir))
+      try listing.iterator.asScala
+        .filter(f => Files.isRegularFile(f) && doomed(f.getFileName.toString))
+        .foreach(Files.deleteIfExists)
+      finally listing.close()
+    }
+}
+
 private[sources] class SpecCsvBatchWrite(spec: FileSpec, path: String,
-    inSchema: StructType, confEntries: Array[(String, String)])
+    inSchema: StructType)
     extends org.apache.spark.sql.connector.write.BatchWrite {
   import org.apache.spark.sql.connector.write._
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new SpecCsvWriterFactory(spec, path, inSchema, confEntries)
+    new SpecCsvWriterFactory(spec, path, inSchema)
   override def commit(messages: Array[WriterCommitMessage]): Unit = ()
   /** Driver-side abort: sweep any leftover task temp files so a failed or
     * killed write never leaves .inprogress litter (task-level abort handles
     * its own file; this catches tasks that died without running it). */
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    if (fs.exists(dir))
-      fs.listStatus(dir)
-        .filter(_.getPath.getName.endsWith(".inprogress"))
-        .foreach(st => fs.delete(st.getPath, false))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SpecCsvBatchWrite.sweep(path, _.endsWith(".inprogress"))
 }
 
 private[sources] class SpecCsvWriterFactory(spec: FileSpec, path: String,
-    inSchema: StructType, confEntries: Array[(String, String)])
+    inSchema: StructType)
     extends org.apache.spark.sql.connector.write.DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new SpecCsvDataWriter(spec, path, inSchema, confEntries, partitionId, taskId)
+    new SpecCsvDataWriter(spec, path, inSchema, partitionId, taskId)
 }
 
 private[sources] class SpecCsvDataWriter(spec: FileSpec, path: String,
-    inSchema: StructType, confEntries: Array[(String, String)],
-    partitionId: Int, taskId: Long)
+    inSchema: StructType, partitionId: Int, taskId: Long)
     extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
   import org.apache.spark.sql.connector.write.WriterCommitMessage
 
-  private val conf = {
-    val c = new Configuration(false)
-    confEntries.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  private val fs = new Path(path).getFileSystem(conf)
-  private val finalPath =
-    new Path(path, f"part-$partitionId%05d-$taskId.csv")
-  private val tmpPath =
-    new Path(path, f".part-$partitionId%05d-$taskId.csv.inprogress")
+  private val finalPath = Paths.get(path, f"part-$partitionId%05d-$taskId.csv")
+  private val tmpPath = Paths.get(path, f".part-$partitionId%05d-$taskId.csv.inprogress")
   private val out = new java.io.BufferedWriter(
-    new java.io.OutputStreamWriter(fs.create(tmpPath, true), spec.encoding))
+    new java.io.OutputStreamWriter(Files.newOutputStream(tmpPath), spec.encoding))
 
   // spec column -> input schema ordinal (by name; -1 = absent -> "")
   private val srcIdx: Array[Int] =
@@ -356,16 +350,14 @@ private[sources] class SpecCsvDataWriter(spec: FileSpec, path: String,
 
   override def commit(): WriterCommitMessage = {
     out.close()
-    // a false return (stale destination, dead FS) must fail the task so
-    // Spark retries it — reporting success with no output file is silent
-    // partition loss (round-10 advice)
-    if (!fs.rename(tmpPath, finalPath))
-      throw new java.io.IOException(s"rename $tmpPath -> $finalPath failed")
+    // a stale destination fails the move, and so the task, so Spark retries
+    // it — reporting success with no output file is silent partition loss
+    Files.move(tmpPath, finalPath)
     new WriterCommitMessage {}
   }
   override def abort(): Unit = {
     try out.close() catch { case _: java.io.IOException => () }
-    fs.delete(tmpPath, false)
+    Files.deleteIfExists(tmpPath)
     ()
   }
   override def close(): Unit = ()

@@ -179,6 +179,11 @@ class PermissionMatrixSpec extends AnyFunSuite {
       val tvRuns = req("GET", "/api/runs", "", Some(tv)).body()
       assert(tvRuns.contains("m1"), s"team sharee must see m1 runs: $tvRuns")
       assert(!req("GET", "/api/runs", "", Some(rando)).body().contains("m1"))
+      // the /runs page shows the same runs
+      val tvPage = req("GET", "/runs", "", Some(tv)).body()
+      assert(tvPage.contains("m1"), s"team sharee must see m1 runs on /runs: $tvPage")
+      val randoPage = req("GET", "/runs", "", Some(rando)).body()
+      assert(!randoPage.contains("m1"), s"rando must not see m1 runs on /runs: $randoPage")
 
       // post-delete: the id is tombstoned — even an edit-sharee cannot
       // recreate it, the owner can

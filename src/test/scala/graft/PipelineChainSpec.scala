@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import graft.spec._
-import graft.engine.{CsvSource, Pipeline, Runner}
+import graft.engine.{CsvSource, Pipeline, PipelineResult, Runner}
 
 /** c17 — declarative multi-step mapping chains (reference ROADMAP.md:53).
   * The load-bearing pin: a chain executed as ONE composed plan is
@@ -108,6 +108,37 @@ class PipelineChainSpec extends AnyFunSuite {
       CsvSource.readWithLineNumbers(spark, in, FileSpec("t", "t")),
       ms("m1"), dir.resolve("seq.csv").toString, failOnError = true)
     assert(!seq.written && seq.errorCount == res.stages(0).errorCount)
+  }
+
+  /** Runs m1 (gated) then m2 (ungated) over `rows`, counting the chain's
+    * Spark jobs; the input is read before counting starts. */
+  private def countedChain(name: String, rows: String): (PipelineResult, Int, String) = {
+    val dir = Files.createTempDirectory(name)
+    val in = write(dir, "in.csv", "town,amount,when\n" + rows)
+    val df = CsvSource.readWithLineNumbers(spark, in, FileSpec("t", "t"))
+    val out = dir.resolve("out.csv").toString
+    val ms = mappings
+    var res: PipelineResult = null
+    val ran = SparkJobs.during(spark) {
+      res = Pipeline.run(df, Seq((ms("m1"), true), (ms("m2"), false)), out)
+    }
+    (res, ran.jobs, out)
+  }
+
+  test("c17: a chain whose fail_on_error gate passes is one Spark job") {
+    val (res, jobs, out) = countedChain("chain_jobs_pass",
+      "a,10.5,2024-01-02T03:04:05\nb,3,2024-05-06T07:08:09\n")
+    assert(res.written && res.gatedStage.isEmpty && Files.exists(Paths.get(out)))
+    assert(jobs == 1, s"the chain ran $jobs Spark jobs")
+  }
+
+  test("c17: a chain whose gate trips is one Spark job and leaves no file") {
+    val (res, jobs, out) = countedChain("chain_jobs_trip",
+      "a,10.5,notadate\nb,3,2024-05-06T07:08:09\n")
+    assert(!res.written && res.gatedStage.contains(0) && !res.stages(1).ran)
+    assert(jobs == 1, s"the chain ran $jobs Spark jobs")
+    val left = Seq("", ".__tmp__", ".__staging__").map(s => Paths.get(out + s)).filter(Files.exists(_))
+    assert(left.isEmpty, s"left behind: $left")
   }
 
   test("c17: fail_on_error=false lets an erroring stage flow through, like the reference") {

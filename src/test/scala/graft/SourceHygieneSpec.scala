@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * by hand only in engine/PyCsv, so the dialect is kept in one place; its
   * one call of Spark's own CSV reader is in CsvSource, and records are
   * numbered by one reader, CsvSource.readWithLineNumbers. Spark's internal
-  * Column API is reached only through the graftbridge package. Tests reach
-  * the reference checkout only through ReferenceConfig. */
+  * Column API is reached only through the graftbridge package, and the
+  * engine persists no intermediate. Tests reach the reference checkout
+  * only through ReferenceConfig. */
 class SourceHygieneSpec extends AnyFunSuite {
   private lazy val sources: List[Path] = {
     val walk = Files.walk(Paths.get("src"))
@@ -84,6 +85,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     val offenders = main.filter(p => !p.startsWith(bridge) &&
       internals.exists(Files.readString(p, ISO_8859_1).contains))
     assert(offenders.isEmpty, s"Spark internals outside graftbridge in: ${offenders.mkString(", ")}")
+  }
+
+  test("src/main/scala/graft/engine persists nothing") {
+    // the engine observes its counters on the one action that runs a pass,
+    // so no intermediate has to be cached, or released, around it
+    val engine = Paths.get("src/main/scala/graft/engine")
+    assert(sources.exists(_.startsWith(engine)))
+    val calls = Seq(".persist(", ".cache()")
+    val offenders = sources.filter(p => p.startsWith(engine) &&
+      calls.exists(Files.readString(p, ISO_8859_1).contains))
+    assert(offenders.isEmpty, s"persisted intermediates in: ${offenders.mkString(", ")}")
   }
 
   test("src/test reaches the reference checkout only through ReferenceConfig") {

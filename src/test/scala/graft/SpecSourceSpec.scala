@@ -226,8 +226,17 @@ class SpecSourceSpec extends AnyFunSuite {
     val after = spark.read.format("graft.sources.SpecCsvTable")
       .option("spec", specJson).option("path", s"$out/*.csv").load().collect()
     assert(after.length == 1 && after.head.getString(0) == "9", after.toSeq.toString)
-    // no in-progress partials survive
-    assert(!new java.io.File(out).listFiles().exists(_.getName.endsWith(".inprogress")))
+    // no in-progress partials survive, and no side files: only the parts
+    val left = new java.io.File(out).listFiles().map(_.getName).toSeq
+    assert(left.forall(n => n.startsWith("part-") && n.endsWith(".csv")), left.toString)
+    // a path with a URI scheme is refused, naming it, not written as a
+    // relative local directory
+    val remote = "hdfs://namenode/specsink"
+    val e = intercept[IllegalArgumentException](Seq(("9", "z")).toDF("k", "v")
+      .write.format("graft.sources.SpecCsvTable")
+      .option("spec", specJson).option("path", remote).mode("overwrite").save())
+    assert(e.getMessage.contains(remote), e.getMessage)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get("hdfs:")))
   }
 
   test("k22: connector equals the engine's CsvSource + FilterCompiler path") {
